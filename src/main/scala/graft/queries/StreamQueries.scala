@@ -1177,21 +1177,8 @@ object StreamQueries {
               // resolve once per batch, route each key to exactly one shard
               val up = graft.replay.ChangeStream.resolved(df, src.keyCol)
               up.persist()
-              // the two shard merges touch disjoint tables/dirs — submit
-              // them from separate threads so the second shard's jobs
-              // back-fill the first's scheduling gaps (guide §2.6 overlap
-              // independent jobs); FIFO scheduling keeps them fair
-              import scala.concurrent.{Await, Future}
-              import scala.concurrent.ExecutionContext.Implicits.global
-              try {
-                Await.result(Future.sequence(shards.map { case (i, t) =>
-                  Future {
-                    val part = up.filter(col(t.keyCol).cast("long") % 2 === i)
-                    if (!part.isEmpty) { t.merge(part, t.keyCol, batchId); () }
-                  }
-                }), scala.concurrent.duration.Duration.Inf)
-                ()
-              } finally { up.unpersist(); () }
+              try mergeShards(shards, up, batchId)
+              finally { up.unpersist(); () }
             }
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start()
@@ -1200,6 +1187,29 @@ object StreamQueries {
         shards
       })
     }
+
+  /** Merge each shard's keys (`key mod 2`) of `up` into its table. The
+    * shard merges touch disjoint tables/dirs, so they run from separate
+    * threads and the second shard's jobs back-fill the first's scheduling
+    * gaps (guide §2.6 overlap independent jobs; FIFO scheduling keeps them
+    * fair). Returns only once EVERY merge has ended, then rethrows the
+    * first failure: a fail-fast await would return while a sibling merge
+    * still writes, and the batch's retry would race that merge on the same
+    * table.
+    */
+  private[graft] def mergeShards(shards: Seq[(Int, IcebergLikeTable)],
+      up: DataFrame, batchId: Long): Unit = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val outcomes = Await.result(Future.sequence(shards.map { case (i, t) =>
+      Future {
+        val part = up.filter(col(t.keyCol).cast("long") % 2 === i)
+        if (!part.isEmpty) { t.merge(part, t.keyCol, batchId); () }
+      }.transform(scala.util.Success(_))
+    }), scala.concurrent.duration.Duration.Inf)
+    outcomes.collectFirst { case scala.util.Failure(e) => throw e }
+    ()
+  }
 
   def cdcFanout(s: SparkSession, d: String): DataFrame =
     runCdcFanout(s, d).map { case (i, table) =>

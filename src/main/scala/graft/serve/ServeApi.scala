@@ -1,11 +1,14 @@
 package graft.serve
 
+import java.io.CharArrayWriter
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.Executors
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.json.{JSONOptions, JacksonGenerator}
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.functions.GzipCodec
 import graft.ops.{DumpAlreadyRunning, DumpManager, DumpService, DumpStatus}
@@ -21,9 +24,10 @@ import graft.store.IcebergLikeTable
   *
   *  - `GET /health/ping`                          → "ok" (reference :123-130)
   *  - `GET /snapshots`                            → target list (Q2, reference :43-48)
-  *  - `GET /snapshots/{t}/entities/{k}`           → bucket-pruned point
-  *    lookup ([[IcebergLikeTable.lookup]], Q1) returning the resolved row
-  *    as JSON; honors `Accept-Encoding: gzip` like the reference (:237-263)
+  *  - `GET /snapshots/{t}/entities/{k}`           → driver-side point
+  *    read ([[IcebergLikeTable.get]], Q1) returning the resolved row as
+  *    JSON, byte for byte what `lookup(...).toJSON` yields; honors
+  *    `Accept-Encoding: gzip` like the reference (:237-263)
   *  - `POST /snapshots/{t}/dump?force_restart=b`  → starts an async dump
   *    ([[DumpService.runAsync]]) → 202 `{"dumpUid":…}`; 409 + running uid
   *    when one is active (reference :150-186)
@@ -32,8 +36,9 @@ import graft.store.IcebergLikeTable
   *    lifecycle AND cancels the Spark job group (reference :208-228)
   *
   * Scale notes: the server binds loopback and runs on a small fixed pool —
-  * it is an operator console, not a data plane. A point lookup costs one
-  * single-bucket Spark job (bloom + bucket pruning applied); a dump runs
+  * it is an operator console, not a data plane. A point lookup runs no
+  * Spark job: it reads the key's bucket files on the handler thread
+  * (bloom + bucket pruning applied); a dump runs
   * as its own daemon thread + job group so control routes stay responsive
   * (Spark's scheduler is concurrent across driver threads by design). At
   * fleet scale this facade would sit behind the driver of a long-lived
@@ -45,6 +50,7 @@ final class ServeApi(targets: Map[String, ServeApi.Target], port: Int = 0)(
 
   val manager = new DumpManager
 
+  ServeApi.enableNoDelay()
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   private val pool = Executors.newFixedThreadPool(4, r => {
     val t = new Thread(r, "graft-serve"); t.setDaemon(true); t
@@ -94,8 +100,7 @@ final class ServeApi(targets: Map[String, ServeApi.Target], port: Int = 0)(
     targets.get(target) match {
       case None => respond(ex, 404, msg(s"Unknown target $target"))
       case Some(t) =>
-        // one bucket-pruned job; ≤1 row after last-writer-wins resolution
-        t.table.lookup(t.table.keyCol, key).toJSON.collect().headOption match {
+        t.table.get(key).map(json) match {
           case None => respond(ex, 404, msg(s"Unknown key $key"))
           case Some(row) =>
             val acceptGzip = Option(ex.getRequestHeaders.getFirst("Accept-Encoding"))
@@ -142,6 +147,19 @@ final class ServeApi(targets: Map[String, ServeApi.Target], port: Int = 0)(
 
   // ---- plumbing ------------------------------------------------------
 
+  /** The row as `Dataset.toJSON` renders it: Catalyst's JacksonGenerator
+    * under default options in the session time zone, with this session's
+    * SQL conf active on the handler thread (the generator reads it).
+    */
+  private def json(e: IcebergLikeTable.Entity): String = {
+    SparkSession.setActiveSession(spark)
+    val out = new CharArrayWriter()
+    val gen = new JacksonGenerator(e.schema, out, new JSONOptions(Map.empty[String, String],
+      spark.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key)))
+    try gen.write(e.row) finally gen.close()
+    out.toString
+  }
+
   private def dumpJson(uid: String, st: DumpStatus.Value): String =
     s"""{"dumpUid": ${q(uid)}, "status": ${q(st.toString)}}"""
 
@@ -179,6 +197,18 @@ final class ServeApi(targets: Map[String, ServeApi.Target], port: Int = 0)(
 }
 
 object ServeApi {
+  private val NoDelay = "sun.net.httpserver.nodelay"
+
+  /** TCP_NODELAY for the JDK server's sockets. It writes a response's
+    * headers and body as two segments; with Nagle on, a kept-alive
+    * connection holds the body until the client's delayed ACK (~40 ms).
+    * The JDK reads the property once, when its server config class loads
+    * at the first `HttpServer.create` in the JVM, so it is set before
+    * that, and never over a value the operator chose.
+    */
+  private def enableNoDelay(): Unit =
+    if (System.getProperty(NoDelay) == null) System.setProperty(NoDelay, "true")
+
   /** A servable target: the snapshot table plus the dump sink (the
     * reference publishes dumped keys to SQS; here the sink is
     * caller-supplied and runs on executors — see [[DumpService.runDump]]).

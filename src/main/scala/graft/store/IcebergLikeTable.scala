@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.model.Schemas
@@ -70,6 +71,11 @@ object IcebergLikeTable {
     * it never enters the committed table schema.
     */
   val DeleteCol = "__del"
+
+  /** One resolved row of [[IcebergLikeTable.get]], in Catalyst's internal
+    * form, with the committed schema it was read under.
+    */
+  final case class Entity(schema: StructType, row: InternalRow)
 
   /** Open an EXISTING table from its committed contract: bucket count,
     * key column, stats column, and append-only declaration all come from
@@ -764,12 +770,15 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
   /** Pin the current committed snapshot (see [[PinnedView]]). */
   def pin(): PinnedView = new PinnedView(readManifest())
 
-  /** Point lookup — prunes to the key's single bucket before scanning
-    * (znap Q1: restapi/DynamoDBEntityReader.scala:38-73 consistent getItem).
-    * The bucket is computed by evaluating Catalyst's own Murmur3Hash on
-    * the driver — consistent with [[bucketOf]]'s `hash()` by construction
-    * (same expression class, same default seed), and no Spark job is spent
-    * hashing one string: a lookup launches exactly one job, the scan.
+  /** Point lookup as a lazy frame — prunes to the key's single bucket
+    * before scanning (znap Q1: restapi/DynamoDBEntityReader.scala:38-73
+    * consistent getItem). The bucket is computed by evaluating Catalyst's
+    * own Murmur3Hash on the driver (see [[driverBucket]]), so no job is
+    * spent hashing one string. Collecting it runs one job on a bucket
+    * without deltas (the scan) and two on a bucket with a delta chain
+    * (scan + partial aggregate, then the resolving final aggregate). It
+    * stays a frame so SQL plans ([[graft.plans.GraftScan]]) can rebind it;
+    * a caller that wants the row itself uses [[get]], which runs no job.
     */
   def lookup(c: String, key: String): DataFrame = {
     require(c == keyCol, s"lookup key column '$c' != table key '$keyCol'")
@@ -798,6 +807,47 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
       .eval(org.apache.spark.sql.catalyst.InternalRow.empty)
       .asInstanceOf[Int]
     ((h % nb) + nb) % nb
+  }
+
+  private lazy val pointReader = new PointReader(keyCol)
+
+  /** Driver-side point read — znap's consistent `getItem`: one manifest
+    * read, then Spark's Parquet reader on the calling thread over the
+    * key's bucket files only (base + deltas), the key pushed down so
+    * row-group stats and the key bloom prune ([[PointReader]]). No Spark
+    * job runs. The row with the greatest `__seq` wins, as in [[lookup]];
+    * a winning delete marker reads as absent. Returns the row under the
+    * committed schema, or None. Safe to call from many threads.
+    */
+  def get(key: String): Option[IcebergLikeTable.Entity] = {
+    val m = readManifest()
+    val schema = m.tableSchema.getOrElse(emptySchema)
+    val seqAt = schema.length
+    val (read, files) = pointScan(m, key)
+    pointReader.rows(read, files, key)
+      .maxByOption(_.getLong(seqAt))
+      .filterNot(r => m.hasDeletes && !r.isNullAt(seqAt + 1) && r.getBoolean(seqAt + 1))
+      .map(r => IcebergLikeTable.Entity(schema,
+        InternalRow.fromSeq(schema.fields.indices.map(i => r.get(i, schema(i).dataType)))))
+  }
+
+  /** The schema [[get]] reads under `m` (committed schema + `__seq`, +
+    * `__del` while markers may be live; all nullable) and the key's
+    * bucket files.
+    */
+  private def pointScan(m: Manifest, key: String): (StructType, Seq[Path]) = {
+    val read = plusSeq(m.tableSchema.getOrElse(emptySchema), withDel = m.hasDeletes)
+    val b = driverBucket(key, bucketsOf(m))
+    (StructType(read.fields.map(_.copy(nullable = true))),
+      (m.buckets.getOrElse(b, Nil) ++ m.deltas.getOrElse(b, Nil)).map(f => Paths.get(root, f)))
+  }
+
+  /** Rows [[get]] decodes for `key` before matching it — what the pushed
+    * key filter let through (tests of the pushdown).
+    */
+  private[store] def pointRowsScanned(key: String): Int = {
+    val (read, files) = pointScan(readManifest(), key)
+    files.map(f => pointReader.scan(read, f, key)(_.size)).sum
   }
 
   private def lookupPruned(keys: Seq[String], pred: Column): DataFrame =
@@ -1361,8 +1411,43 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
     // Tombstone deletions run AFTER lock release: the files are already
     // invisible from every retained manifest, so no reader or writer can
     // resurrect them, and the lock hold stays free of O(deletable) I/O.
-    deletable.foreach(f => Files.deleteIfExists(Paths.get(root, f)))
+    deletable.foreach(deleteDataFile)
   }
+
+  /** Delete a superseded data file with its `.crc` sidecar, then its
+    * `__bucket=<k>` dir once empty, then the write's version dir once
+    * only the writer's `_SUCCESS` marker is left in it — per-commit GC
+    * leaves no litter for [[vacuum]] to walk.
+    */
+  private def deleteDataFile(rel: String): Unit = {
+    val f = Paths.get(root, rel)
+    Files.deleteIfExists(f)
+    Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
+    val bucketDir = f.getParent
+    if (bucketDir.getFileName.toString.startsWith("__bucket=") &&
+        bucketDir.getParent.getParent == Paths.get(root, "data") &&
+        pruneDir(bucketDir, Set.empty))
+      pruneDir(bucketDir.getParent, Set("_SUCCESS", "._SUCCESS.crc"))
+  }
+
+  /** Delete `dir` if it holds nothing but `leftovers` (deleted with it);
+    * true iff it is gone. A dir that gains a child meanwhile, or that a
+    * concurrent GC already removed, is left to its fate.
+    */
+  private def pruneDir(dir: Path, leftovers: Set[String]): Boolean =
+    try {
+      val ls = Files.list(dir)
+      val names = try ls.iterator().asScala.map(_.getFileName.toString).toList
+        finally ls.close()
+      names.forall(leftovers.contains) && {
+        names.foreach(n => Files.deleteIfExists(dir.resolve(n)))
+        Files.deleteIfExists(dir)
+        true
+      }
+    } catch {
+      case _: java.nio.file.DirectoryNotEmptyException => false
+      case _: java.nio.file.NoSuchFileException => false
+    }
 
   /** Deep clean (NOT on the per-commit path — [[commitAndGc]] handles the
     * steady state incrementally from the tombstone log): full data/ walk

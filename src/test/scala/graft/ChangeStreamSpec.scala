@@ -90,4 +90,23 @@ class ChangeStreamSpec extends SparkSpec {
     assert(got.sorted.toSeq ===
       Seq(("a", 1, 0L), ("a", 2, 1L), ("b", 1, 1L)))
   }
+
+  test("cdc fan-out: a failing shard merge surfaces only after every sibling merge has ended") {
+    // shard 0 committed `n` as a string, so merging the int batch into it
+    // fails fast on the type check; shard 1's merge is a real write
+    val bad = new IcebergLikeTable(tmpDir("fanbad") + "/t", 4)
+    bad.merge(Seq(("0", "x")).toDF("conv_id", "n"), "conv_id", 0L)
+    val good = mk("fangood")
+    val up = snap("1" -> 1, "2" -> 2, "3" -> 3, "4" -> 4)
+    val e = intercept[IllegalArgumentException] {
+      graft.queries.StreamQueries.mergeShards(Seq(0 -> bad, 1 -> good), up, 1L)
+    }
+    assert(e.getMessage.contains("type change"))
+    // nothing of the batch is still in flight once the call has returned:
+    // the sibling's merge has committed, and no commit lock is held
+    assert(good.readManifest().lastBatchId === 1L)
+    assert(content(good) === Map("1" -> 1, "3" -> 3))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(good.root, "commit.lock")))
+    assert(bad.readManifest().lastBatchId === 0L)
+  }
 }

@@ -77,6 +77,70 @@ class ServeApiSpec extends SparkSpec {
     } finally api.stop()
   }
 
+  /** A table whose buckets carry delta chains: c-1 updated with a column
+    * the first batch lacked, c-2 deleted, c-5 written before the column.
+    */
+  private def mkChainTable(tag: String): IcebergLikeTable = {
+    def ts(ms: Long) = new java.sql.Timestamp(ms)
+    def snaps(turns: model.Turn*) =
+      SnapshotFold.typedSnapshots(spark.createDataset(turns)).toDF()
+    val t = new IcebergLikeTable(tmpDir(tag) + "/t", 2)
+    t.merge(snaps(
+      model.Turn("c-1", 1, "user", "hello", "", ts(1000L)),
+      model.Turn("c-2", 1, "user", "solo", "", ts(1500L)),
+      model.Turn("c-5", 1, "user", "early", "search", ts(1200L))), "conv_id", 0L)
+    t.merge(snaps(model.Turn("c-1", 2, "assistant", "world", "search", ts(2000L)))
+      .withColumn("tier", org.apache.spark.sql.functions.lit("gold")), "conv_id", 1L)
+    t.delete(Seq("c-2").toDF("conv_id"), 2L)
+    t
+  }
+
+  test("point reads over a delta chain: deletes 404, added columns, bodies equal lookup(...).toJSON") {
+    val table = mkChainTable("serve-chain")
+    assert(table.readManifest().deltas.values.exists(_.size >= 2),
+      "the fixture should leave a delta chain")
+    val api = new ServeApi(Map("t" -> ServeApi.Target(table)))
+    val port = api.start()
+    try {
+      Seq("c-1", "c-2", "c-5", "never").foreach { k =>
+        val r = get(port, s"/snapshots/t/entities/$k")
+        table.lookup("conv_id", k).toJSON.collect().headOption match {
+          case None => assert(r.statusCode() === 404, s"$k should be absent")
+          case Some(expected) =>
+            assert(r.statusCode() === 200, s"$k should be served")
+            assert(text(r) === expected, s"$k body differs from toJSON")
+        }
+      }
+      assert(get(port, "/snapshots/t/entities/c-2").statusCode() === 404)
+      assert(text(get(port, "/snapshots/t/entities/c-1")).contains("\"tier\":\"gold\""))
+      // written before the column existed: the field is omitted, as toJSON does
+      assert(!text(get(port, "/snapshots/t/entities/c-5")).contains("tier"))
+    } finally api.stop()
+  }
+
+  test("HTTP point reads launch no Spark job") {
+    val table = mkChainTable("serve-nojob")
+    val api = new ServeApi(Map("t" -> ServeApi.Target(table)))
+    val port = api.start()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graftshim.Shim.waitListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val codes = (0 until 24).map(i =>
+        get(port, s"/snapshots/t/entities/${Seq("c-1", "c-2", "c-5", "never")(i % 4)}").statusCode())
+      assert(codes.count(_ == 200) === 12 && codes.count(_ == 404) === 12)
+      org.apache.spark.sql.graftshim.Shim.waitListenerBus(spark.sparkContext)
+      assert(jobs.get() === 0, s"24 lookups launched ${jobs.get()} Spark jobs")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      api.stop()
+    }
+  }
+
   test("dump lifecycle over HTTP: start → status → list; conflict 409; abort") {
     val table = mkTable("serve-dump")
     val acc = spark.sparkContext.collectionAccumulator[String]("served-dump")

@@ -7,7 +7,7 @@ import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
-import graft.store.IcebergLikeTable
+import graft.store.{IcebergLikeTable, StoreTestAccess}
 
 /** Parquet key bloom filters (`keyBloomNdv`): the point-lookup pruning
   * dimension min/max stats cannot provide — a delta file is one
@@ -102,6 +102,21 @@ class StoreBloomSpec extends SparkSpec {
       "bloom failed to exclude all row groups for an absent key")
     // a present key keeps its bucket's row group
     assert(rowGroups(bloomed, "conv-55") > 0)
+  }
+
+  test("driver-side get pushes its key into the parquet read: bloom and stats skip row groups") {
+    val bloomed = mkTable(Some(1000L))
+    val plain = mkTable(None)
+    Seq(bloomed, plain).foreach(_.merge(batch(0 until 200), "conv_id", 0L))
+    def scanned(t: IcebergLikeTable, key: String) = StoreTestAccess.pointRowsScanned(t, key)
+    // in range of every file: only the bloom can skip the row group
+    assert(scanned(plain, AbsentInRange) > 0)
+    assert(scanned(bloomed, AbsentInRange) === 0)
+    // past every file's max key: the row-group stats skip it, bloom or not
+    assert(scanned(plain, "zz-absent") === 0)
+    assert(scanned(bloomed, "conv-55") > 0)
+    assert(bloomed.get(AbsentInRange).isEmpty)
+    assert(bloomed.get("conv-55").map(_.row.getLong(1)) === Some(55L))
   }
 
   test("no keyBloomNdv -> no bloom bytes written") {

@@ -68,6 +68,30 @@ class StoreConcurrencySpec extends SparkSpec {
       writerT.fileStats()._1 + writerT.fileStats()._2)
   }
 
+  test("driver-side get from many threads: each read sees its own key") {
+    // bloom + one delta per batch: a read pushing another thread's key
+    // would skip the row groups that hold its own
+    val t = new IcebergLikeTable(tmpDir("getmt") + "/t", numBuckets = 4,
+      inlineCompaction = false, emptySchema = schema, keyBloomNdv = Some(1000L))
+    (0 until 4).foreach { b =>
+      t.merge((0 until 50).filter(_ % 4 != b).map(i => (s"k$i", b * 100 + i))
+        .toDF("conv_id", "n"), "conv_id", b.toLong)
+    }
+    val expected = t.read().as[(String, Int)].collect().toMap
+    val probes = (0 until 60).map(i => s"k$i") // k50..k59 never written
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      (0 until 8).map { w =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = (0 until 100).foreach { j =>
+            val k = probes((w * 37 + j * 11) % probes.size)
+            assert(t.get(k).map(_.row.getInt(1)) === expected.get(k), s"get($k)")
+          }
+        })
+      }.foreach(_.get())
+    } finally pool.shutdownNow()
+  }
+
   test("metadata-only conflict: a commit computed before a concurrent dropColumn is rejected") {
     val root = tmpDir("metaconflict") + "/t"
     val t = new IcebergLikeTable(root, numBuckets = 2, emptySchema = schema)

@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.functions.GzipCodec
 import graft.model.{ConvSnapshot, Turn}
@@ -108,6 +109,32 @@ class TableMaintenanceSpec extends SparkSpec {
     val (base, delta) = table.fileStats()
     assert(table.dataFilesOnDisk() === base + delta,
       "disk holds parquet files the manifest no longer references")
+  }
+
+  test("per-commit GC leaves no .crc without its data file and no empty dir under data/") {
+    val root = tmpDir("gclitter") + "/t"
+    val table = new IcebergLikeTable(root, numBuckets = 4,
+      maxDeltasPerBucket = 2, retainManifests = 1)
+    val keys = (0 until 8).map(i => s"c$i")
+    // batches 1 and 3 compact inline: each supersedes a whole delta chain
+    // (batch 1's own fresh deltas included) and batch 3 also the base
+    (0 until 4).foreach(b => mergeBatch(table, b.toLong, keys.map(k => snap(k, b))))
+    val (base, delta) = table.fileStats()
+    assert(base > 0 && delta === 0, s"expected a compacted table (base=$base delta=$delta)")
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root, "data"))
+    val entries = try walk.iterator().asScala.toList finally walk.close()
+    val (dirs, files) = entries.partition(java.nio.file.Files.isDirectory(_))
+    val names = files.map(_.toString).toSet
+    val orphanCrc = files.map(_.toString).filter(_.endsWith(".crc")).filterNot { c =>
+      val p = java.nio.file.Paths.get(c)
+      names.contains(p.resolveSibling(
+        p.getFileName.toString.stripPrefix(".").stripSuffix(".crc")).toString)
+    }
+    assert(orphanCrc.isEmpty, s".crc sidecars without their data file: $orphanCrc")
+    val bare = dirs.filterNot(d => files.exists(f =>
+      f.startsWith(d) && f.getFileName.toString.endsWith(".parquet")))
+    assert(bare.isEmpty, s"dirs under data/ without a data file: $bare")
+    assert(table.dataFilesOnDisk() === base)
   }
 
   test("time travel: readAsOf reproduces each retained version; expired versions fail cleanly") {

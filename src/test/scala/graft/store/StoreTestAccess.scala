@@ -22,4 +22,10 @@ object StoreTestAccess {
     */
   def swapManifest(t: IcebergLikeTable)(m: t.Manifest): Unit =
     t.commitManifest(m)
+
+  /** Rows the driver-side point read decodes for `key` before matching
+    * it: what its pushed key filter let through.
+    */
+  def pointRowsScanned(t: IcebergLikeTable, key: String): Int =
+    t.pointRowsScanned(key)
 }
