@@ -71,8 +71,8 @@ object Dedup {
     // same one-base-hash + k-functions family construction Spark's
     // MinHashLSH uses). The earlier form hashed the full string k times
     // (k × ~30-byte hashes per shingle row): at sf0.1 the signature pass
-    // alone was ~80% of ngram_jaccard_lsh's wall (BenchExtra
-    // lsh_signatures) — guide §1.2 step 2, per-task work.
+    // alone was ~80% of ngram_jaccard_lsh's wall (noop-sink stage
+    // isolation, OPTIMIZATION_r06.md) — guide §1.2 step 2, per-task work.
     val sh = docs.select(col(idCol).as("doc_id"),
       explode(shingleArr(col(textCol))).as("sh"))
       .select(col("doc_id"), xxhash64(col("sh")).as("hb"))

@@ -18,8 +18,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * concat_ws(" ", element_at(w, i+1), ...))` — is a higher-order
   * function, and HOF lambdas are evaluated INTERPRETED, one expression-
   * tree walk per array element. On the sf0.1 corpus the 3-gram explode
-  * alone cost ~6.8 s of a 0.2 s tokenise (BenchExtra `sig_explode` vs
-  * `tok_explode`): ~260k interpreted lambda evals dominated every
+  * alone cost ~6.8 s of a 0.2 s tokenise (noop-sink stage isolation,
+  * OPTIMIZATION_r06.md): ~260k interpreted lambda evals dominated every
   * shingle-based operator (minhash signatures, ngram Jaccard, dup-span
   * hits, decontamination). This expression builds the grams in one tight
   * JVM loop over [[ArrayData]] and is embedded in whole-stage codegen via

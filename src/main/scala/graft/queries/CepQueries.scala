@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.cep.{Cep, CepEvent, CepMatch, CepStream}
+import graft.queries.StreamDrain.{drain, drainToParquet, fileStream}
 import graft.store.IcebergLikeTable
 
 /** CEP query surface over the events fixture (events-as-user-streams:
@@ -128,7 +129,7 @@ object CepQueries {
              FROM events)))"""
 
   // ---- streaming NFA ---------------------------------------------------
-  private val cepCache = new FixtureCache[String]()
+  private val cepCache = new FixtureCache[DataFrame]()
   private val cepStageCache = new FixtureCache[String]()
 
   /** ONE staged, time-ordered event stream + far-future sentinel shared
@@ -163,50 +164,41 @@ object CepQueries {
     * dummy group — it can't match a 3-step pattern and its own anchor
     * never finalizes). Append-mode parquet sink, checkpointed.
     */
-  private def runCepPipeline(s: SparkSession, d: String): String =
+  private def runCepPipeline(s: SparkSession, d: String): DataFrame =
     runNfaPipeline(s, d, cepCache) { (events, sp) =>
       CepStream.matches(events, PatternSteps.size, WithinUs)(sp)
     }
 
-  private def runNfaPipeline(s: SparkSession, d: String, cache: FixtureCache[String])(
+  /** The staged CEP events as a masked, watermarked [[CepEvent]]
+    * stream: bit j of `mask` is set when step j's predicate holds.
+    */
+  private def cepEvents(s: SparkSession, inDir: String,
+      steps: Seq[Cep.Step]): org.apache.spark.sql.Dataset[CepEvent] = {
+    import s.implicits._
+    val mask = steps.zipWithIndex.map { case (st, j) =>
+      when(st.pred, lit(1 << j)).otherwise(lit(0))
+    }.reduce(_ + _)
+    fileStream(s, inDir, org.apache.spark.sql.types.StructType.fromDDL(
+        "user_id bigint, event_id bigint, event_type string, ts timestamp"))
+      .select(col("user_id").cast("string").as("convId"),
+        col("event_id").as("idx"), unix_micros(col("ts")).as("tsUs"),
+        mask.as("mask"), col("ts"))
+      .withWatermark("ts", "1 minute")
+      .as[CepEvent]
+  }
+
+  private def runNfaPipeline(s: SparkSession, d: String, cache: FixtureCache[DataFrame])(
       nfa: (org.apache.spark.sql.Dataset[CepEvent], SparkSession) =>
-        org.apache.spark.sql.Dataset[CepMatch]): String =
+        org.apache.spark.sql.Dataset[CepMatch]): DataFrame =
     cache.getOrElseUpdate((s, d)) {
-      locally({
-        import s.implicits._
-        implicit val sp: SparkSession = s
-        val tmp = Files.createTempDirectory("graft-cep-q").toString
-        val inDir = stagedCepEvents(s, d)
-        val schema = org.apache.spark.sql.types.StructType.fromDDL(
-          "user_id bigint, event_id bigint, event_type string, ts timestamp")
-        val mask = PatternSteps.zipWithIndex.map { case (st, j) =>
-          when(st.pred, lit(1 << j)).otherwise(lit(0))
-        }.reduce(_ + _)
-        // 2 files/trigger: cross-batch NFA state + watermark finalization
-        // still exercised (2 data batches + sentinel + no-data batch) at
-        // half the per-batch state-store commits
-        val events = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "2").parquet(inDir)
-          .select(col("user_id").cast("string").as("convId"),
-            col("event_id").as("idx"), unix_micros(col("ts")).as("tsUs"),
-            mask.as("mask"), col("ts"))
-          .withWatermark("ts", "1 minute")
-          .as[CepEvent]
-        val outDir = s"$tmp/out"
-        StreamQueries.withStreamParallelism(s, inDir) {
-          val q = nfa(events, s)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .format("parquet").option("path", outDir)
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        outDir
-      })
+      val inDir = stagedCepEvents(s, d)
+      // 2 data batches + sentinel + no-data batch: cross-batch NFA state
+      // and watermark finalization stay exercised
+      drainToParquet(s, inDir, nfa(cepEvents(s, inDir, PatternSteps), s).toDF())
     }
 
-  private def matchesView(outDir: String, s: SparkSession): DataFrame =
-    s.read.parquet(outDir)
+  private def matchesView(matches: DataFrame): DataFrame =
+    matches
       .filter(col("convId") =!= "-1")
       .select(col("convId").as("conv_id"),
         element_at(col("ids"), 1).as("e1"),
@@ -218,12 +210,12 @@ object CepQueries {
     * DuckDB oracle as cep_pattern).
     */
   def cepStream(s: SparkSession, d: String): DataFrame =
-    matchesView(runCepPipeline(s, d), s)
+    matchesView(runCepPipeline(s, d))
 
   val cepStreamSql: String = cepPatternSql
 
   // ---- the same NFA on transformWithState ------------------------------
-  private val cepTwsCache = new FixtureCache[String]()
+  private val cepTwsCache = new FixtureCache[DataFrame]()
 
   /** The SAME strict pattern through [[graft.cep.CepTws]] — Spark 4's
     * transformWithState (ListState buffer in RocksDB, registered
@@ -235,7 +227,7 @@ object CepQueries {
       runNfaPipeline(s, d, cepTwsCache) { (events, sp) =>
         graft.cep.CepTws.matches(events, PatternSteps.size, WithinUs)(sp)
       }
-    }, s)
+    })
 
   val cepTwsSql: String = cepPatternSql
 
@@ -257,46 +249,27 @@ object CepQueries {
     */
   private def runFunnelPipeline(s: SparkSession, d: String): IcebergLikeTable =
     funnelCache.getOrElseUpdate((s, d)) {
-      locally({
-        import s.implicits._
-        implicit val sp: SparkSession = s
-        val tmp = Files.createTempDirectory("graft-funnel-q").toString
-        val inDir = stagedCepEvents(s, d)
-        val schema = org.apache.spark.sql.types.StructType.fromDDL(
-          "user_id bigint, event_id bigint, event_type string, ts timestamp")
-        val mask = FunnelSteps.zipWithIndex.map { case (st, j) =>
-          when(st.pred, lit(1 << j)).otherwise(lit(0))
-        }.reduce(_ + _)
-        val table = new IcebergLikeTable(s"$tmp/table", 8,
-          emptySchema = org.apache.spark.sql.types.StructType.fromDDL(
-            "conv_id string, t1_us bigint, t2_us bigint, t3_us bigint, depth int"))
-        graft.snapshot.SnapshotTws.withRocksDb(s) {
-          StreamQueries.withStreamParallelism(s, inDir) {
-            // 2 files/trigger — same rationale as the NFA drain above
-            val events = s.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "2").parquet(inDir)
-              .select(col("user_id").cast("string").as("convId"),
-                col("event_id").as("idx"), unix_micros(col("ts")).as("tsUs"),
-                mask.as("mask"), col("ts"))
-              .withWatermark("ts", "1 minute")
-              .as[CepEvent]
-            val q = graft.cep.FunnelTws
-              .updates(events, FunnelSteps.size, FunnelWithinUs)
-              .select(col("convId").as("conv_id") +:
-                (1 to FunnelSteps.size).map(j =>
-                  when(size(col("ts")) >= j, element_at(col("ts"), j))
-                    .as(s"t${j}_us")) :+ col("depth"): _*)
-              .writeStream.outputMode("update")
-              .option("checkpointLocation", s"$tmp/ckpt")
-              .foreachBatch { (df: DataFrame, id: Long) =>
-                table.merge(df, "conv_id", id); ()
-              }
-              .start()
-            try q.processAllAvailable() finally q.stop()
+      implicit val sp: SparkSession = s
+      val tmp = Files.createTempDirectory("graft-funnel-q").toString
+      val inDir = stagedCepEvents(s, d)
+      val table = new IcebergLikeTable(s"$tmp/table", 8,
+        emptySchema = org.apache.spark.sql.types.StructType.fromDDL(
+          "conv_id string, t1_us bigint, t2_us bigint, t3_us bigint, depth int"))
+      graft.snapshot.SnapshotTws.withRocksDb(s) {
+        drain(s, inDir)(ckpt => graft.cep.FunnelTws
+          .updates(cepEvents(s, inDir, FunnelSteps), FunnelSteps.size, FunnelWithinUs)
+          .select(col("convId").as("conv_id") +:
+            (1 to FunnelSteps.size).map(j =>
+              when(size(col("ts")) >= j, element_at(col("ts"), j))
+                .as(s"t${j}_us")) :+ col("depth"): _*)
+          .writeStream.outputMode("update")
+          .option("checkpointLocation", ckpt)
+          .foreachBatch { (df: DataFrame, id: Long) =>
+            table.merge(df, "conv_id", id); ()
           }
-        }
-        table
-      })
+          .start())
+      }
+      table
     }
 
   /** Final streaming-funnel table ≡ the batch funnel SQL (same oracle as

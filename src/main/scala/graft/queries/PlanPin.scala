@@ -15,6 +15,13 @@ import org.apache.spark.sql.DataFrame
   * way share one exchange) — the cached relation then reports that
   * hashpartitioning and keyed consumers read it exchange-free.
   *
+  * A pin is keyed by the tag and the canonicalized analyzed plan
+  * itself, so a hit requires the plan `sameResult` would accept — two
+  * plans whose hashes collide still get their own pins. Pinned inputs
+  * must stay unchanged for the session: the key is the plan, not the
+  * data, so a pin over a path rewritten in-session keeps serving the
+  * rows it read first.
+  *
   * Entries are MEMORY_AND_DISK (spills past memory), bounded LRU, and
   * unpersist on eviction — the same lifecycle as the query-layer
   * fixture caches. Every bench/oracle invocation still computes from
@@ -25,8 +32,8 @@ object PlanPin {
     onEvict = df => { df.unpersist(); () })
 
   def pinned(df: DataFrame, tag: String): DataFrame =
-    cache.getOrElseUpdate((df.sparkSession,
-      tag + df.queryExecution.analyzed.semanticHash().toString)) {
+    cache.getOrElseUpdate(
+      (df.sparkSession, (tag, df.queryExecution.analyzed.canonicalized))) {
       df.persist()
     }
 }

@@ -1,13 +1,14 @@
 package graft.queries
 
 import java.nio.file.Files
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.model.{Schemas, Turn}
-import graft.ops.{LagReport, MetricsListener}
+import graft.ops.LagReport
 import graft.pipeline.Fanout
+import graft.queries.StreamDrain.{drain, drainAll, drainToParquet, fileStream}
 import graft.replay.Replay
 import graft.store.IcebergLikeTable
 
@@ -42,56 +43,6 @@ object StreamQueries {
       lit("").as("tool"),
       col("ts"))
 
-  /** Drain a streaming query and ALWAYS stop it: a processAllAvailable
-    * failure (task error, full disk) must not leave a zombie query
-    * retrying its failed batch for the life of the session.
-    */
-  private def runAndStop(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    try q.processAllAvailable() finally q.stop()
-
-  /** Total regular-file bytes under `dir` (the staged stream input). */
-  private def dirBytes(dir: String): Long = {
-    val p = java.nio.file.Paths.get(dir)
-    if (!Files.exists(p)) 0L
-    else {
-      val walk = Files.walk(p)
-      try walk.iterator().asScala
-        .filter(Files.isRegularFile(_)).map(Files.size(_).longValue).sum
-      finally walk.close()
-    }
-  }
-
-  /** Run `body` (a streaming-query start + drain) with
-    * `spark.sql.shuffle.partitions` DERIVED FROM THE STAGED INPUT SIZE
-    * (optimization guide §2: make partitioning scale-adaptive — derive it
-    * from data volume — rather than a constant tuned for either local
-    * mode or the cluster). The shuffle-partition count is what a stateful
-    * streaming query locks in as its state-store partition count, and
-    * every micro-batch commits (numPartitions × stores-per-operator)
-    * state stores plus that many shuffle/sink tasks — at the fixtures'
-    * few-MB scale the session default (= core count) buys no parallelism
-    * and multiplies pure per-batch commit overhead; at 100 TB the same
-    * bytes-per-partition rule yields thousands of partitions. Target:
-    * ~32 MB of input per state partition, floor 4 (cross-partition state
-    * semantics stay exercised), cap 65536.
-    *
-    * Results are unaffected: state partitioning changes WHERE keys live,
-    * never fold/join/window semantics (lineage is tracked on a logical
-    * key shard precisely so o1/h1 stay partitioning-independent).
-    * The conf is restored after the drain; StreamExecution clones the
-    * session at start(), so the value is pinned per query.
-    */
-  private[graft] def withStreamParallelism[A](s: SparkSession,
-      stagedDir: String)(body: => A): A = {
-    val targetBytes = 32L << 20
-    val n = math.min(65536L,
-      math.max(4L, (dirBytes(stagedDir) + targetBytes - 1) / targetBytes))
-    val key = "spark.sql.shuffle.partitions"
-    val old = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, old)
-  }
-
   /** The s1 oracle's 6-column contract — every query that hash-compares a
     * snapshot against the s1 SQL projects through HERE, so the contract
     * lives in one place.
@@ -104,8 +55,7 @@ object StreamQueries {
     unix_micros(col("first_ts")).as("first_ts_us"),
     unix_micros(col("last_ts")).as("last_ts_us"))
 
-  private val pipelineCache =
-    new FixtureCache[(IcebergLikeTable, MetricsListener)]()
+  private val pipelineCache = new FixtureCache[IcebergLikeTable]()
   private val fanoutCache =
     new FixtureCache[Seq[(String, IcebergLikeTable)]]()
   private val turnsByTsCache = new FixtureCache[String]()
@@ -131,55 +81,32 @@ object StreamQueries {
       inDir
     }
 
-  /** Runs (once per session+dir) the pipeline into a fresh temp table with
-    * a MetricsListener attached — O2 in-flight metrics observed on every
-    * real run, not just in a dedicated test.
-    */
-  private def runPipeline(s: SparkSession, d: String): (IcebergLikeTable, MetricsListener) =
+  /** Runs (once per session+dir) the pipeline into a fresh temp table. */
+  private def runPipeline(s: SparkSession, d: String): IcebergLikeTable =
     pipelineCache.getOrElseUpdate((s, d)) {
       locally({
         import s.implicits._
         implicit val sp: SparkSession = s
         val tmp = Files.createTempDirectory("graft-stream-q").toString
-        // 4 range-partitioned files + maxFilesPerTrigger=1 → 4 micro-batches,
-        // exercising cross-batch state carry (znap's multi-batch ingest).
         val inDir = stagedTurnsByTs(s, d)
-        // 2 files/trigger: 2 data batches still exercise cross-batch state
-        // carry at half the per-batch state-store commits (r6; same
-        // rationale as the j5/j7/j8 harness — the fold is batch-slicing-
-        // independent, which is exactly what the s1 oracle proves)
-        val stream = s.readStream.schema(Schemas.turn)
-          .option("maxFilesPerTrigger", "2").parquet(inDir).as[Turn]
         // key blooms on: the oracled q1_sql_lookup / s1 snapshot reads
         // exercise bloom-bearing files end to end
         val table = new IcebergLikeTable(s"$tmp/table", 8,
           keyBloomNdv = Some(4096L))
-        val metrics = new MetricsListener
-        s.streams.addListener(metrics)
-        try withStreamParallelism(s, inDir) {
-          // wide watermark: file arrival order is not ts order, nothing is late
-          // lineage on a LOGICAL 8-way key shard (not spark_partition_id):
-          // stable across core counts/replans, so o1/h1 are oracle-able
-          val q = Replay.fromCheckpoint(stream, table, s"$tmp/ckpt",
-            watermark = "3650 days",
-            lineageShard = Some(pmod(col("conv_id").cast("long"), lit(8))))
-          runAndStop(q)
-          // progress events are delivered ASYNC on the listener bus — drain
-          // it before detaching, or the last batch's metrics are lost
-          // nondeterministically (same guard Bench/ScalingBench use)
-          org.apache.spark.sql.graftshim.Shim.waitListenerBus(s.sparkContext)
-        } finally s.streams.removeListener(metrics)
-        (table, metrics)
+        // wide watermark: file arrival order is not ts order, nothing is late
+        // lineage on a LOGICAL 8-way key shard (not spark_partition_id):
+        // stable across core counts/replans, so o1/h1 are oracle-able
+        drain(s, inDir)(ckpt => Replay.fromCheckpoint(
+          fileStream(s, inDir, Schemas.turn).as[Turn], table, ckpt,
+          watermark = "3650 days",
+          lineageShard = Some(pmod(col("conv_id").cast("long"), lit(8)))))
+        table
       })
     }
 
-  /** Exposes the cached run's in-flight metrics (O2) for bench/tests. */
-  def pipelineMetrics(s: SparkSession, d: String): MetricsListener =
-    runPipeline(s, d)._2
-
   /** S1+A1+O1: streaming snapshot, DuckDB-oracled. */
   def s1StreamSnapshot(s: SparkSession, d: String): DataFrame =
-    snapshotOracleView(runPipeline(s, d)._1.read())
+    snapshotOracleView(runPipeline(s, d).read())
 
   private val twsCache = new FixtureCache[IcebergLikeTable]()
 
@@ -198,19 +125,14 @@ object StreamQueries {
         graft.snapshot.SnapshotTws.withRocksDb(s) {
           val tmp = Files.createTempDirectory("graft-tws-q").toString
           val inDir = stagedTurnsByTs(s, d)
-          // 2 files/trigger — same rationale as runPipeline
-          val stream = s.readStream.schema(Schemas.turn)
-            .option("maxFilesPerTrigger", "2").parquet(inDir).as[Turn]
           val table = new IcebergLikeTable(s"$tmp/table", 8)
-          withStreamParallelism(s, inDir) {
-            val q = graft.snapshot.SnapshotTws.updates(stream, watermark = "3650 days")
-              .writeStream
-              .outputMode("update")
-              .option("checkpointLocation", s"$tmp/ckpt")
-              .foreachBatch(graft.sink.MergeSink(table) _)
-              .start()
-            runAndStop(q)
-          }
+          drain(s, inDir)(ckpt => graft.snapshot.SnapshotTws
+            .updates(fileStream(s, inDir, Schemas.turn).as[Turn],
+              watermark = "3650 days")
+            .writeStream.outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .foreachBatch(graft.sink.MergeSink(table) _)
+            .start())
           table
         }
       })
@@ -243,7 +165,7 @@ object StreamQueries {
     * `lookup()` semantics.
     */
   def q1SqlLookup(s: SparkSession, d: String): DataFrame = {
-    val table = runPipeline(s, d)._1
+    val table = runPipeline(s, d)
     graft.plans.GraftScan.install(s)
     graft.plans.GraftScan.relation(s, table).createOrReplaceTempView("graft_snapshot")
     s.sql(
@@ -361,12 +283,10 @@ object StreamQueries {
     */
   def cdcStream(s: SparkSession, d: String): DataFrame = {
     implicit val sp: SparkSession = s
-    val (src, tmp) = cdcSource(s, d)
-    val dst = new IcebergLikeTable(s"$tmp/dst_stream", 8)
-    withStreamParallelism(s, s"$tmp/table") {
-      val q = graft.replay.ChangeStream.replicate(src, dst, s"$tmp/ckpt_stream")
-      q.awaitTermination(600000)
-    }
+    val src = cdcSource(s, d)._1
+    val dst = new IcebergLikeTable(
+      Files.createTempDirectory("graft-cdc-stream").toString + "/table", 8)
+    drain(s, src.root)(ckpt => graft.replay.ChangeStream.replicate(src, dst, ckpt))
     snapshotOracleView(dst.read())
   }
 
@@ -479,20 +399,13 @@ object StreamQueries {
         Tables.events(s, d)
           .select(concat_ws("#", col("user_id"), col("event_type")).as("k"))
           .repartition(4).write.parquet(inDir)
-        val schema = org.apache.spark.sql.types.StructType.fromDDL("k string")
         val name = s"cms_stream_${math.abs(tmp.hashCode)}"
-        withStreamParallelism(s, inDir) {
-          // 2 files/trigger: the sketch merge is associative+commutative,
-          // so the drained state is slicing-independent (CountMinSpec)
-          val q = s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "2").parquet(inDir)
-            .agg(graft.functions.CountMin.sketch(col("k")).as("sk"))
-            .writeStream.outputMode("complete")
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .format("memory").queryName(name)
-            .start()
-          try q.processAllAvailable() finally q.stop() // a failed drain must not leave a zombie query
-        }
+        drain(s, inDir)(ckpt => fileStream(s, inDir, StructType.fromDDL("k string"))
+          .agg(graft.functions.CountMin.sketch(col("k")).as("sk"))
+          .writeStream.outputMode("complete")
+          .option("checkpointLocation", ckpt)
+          .format("memory").queryName(name)
+          .start())
         val sk = s.table(name).cache()
         sk.count()
         sk
@@ -692,7 +605,7 @@ object StreamQueries {
     * (PipelineOpsSpec), mirroring znap's per-partition offset rows.
     */
   def o1Lineage(s: SparkSession, d: String): DataFrame =
-    runPipeline(s, d)._1.lineage()
+    runPipeline(s, d).lineage()
       .groupBy(col("partition_id"))
       .agg(min(col("min_conv_id")).as("min_conv_id"),
         max(col("max_conv_id")).as("max_conv_id"),
@@ -706,7 +619,7 @@ object StreamQueries {
     * double→long truncation == floor here since lag ≥ 0.
     */
   def h1Lag(s: SparkSession, d: String): DataFrame =
-    LagReport(runPipeline(s, d)._1.lineage(), eventsAsTurns(s, d))
+    LagReport(runPipeline(s, d).lineage(), eventsAsTurns(s, d))
       .select(col("partition_id"),
         unix_micros(col("committed_ts")).as("committed_ts_us"),
         col("lag_ms").cast("long").as("lag_ms"))
@@ -728,23 +641,18 @@ object StreamQueries {
         val tmp = Files.createTempDirectory("graft-ttl-q").toString
         // shared staging is already mtime-stamped: arrival order = time order
         val inDir = stagedTurnsByTs(s, d)
-        // 2 files/trigger: batches stay time-ordered ([f1,f2] then [f3,f4]),
-        // the watermark still advances mid-stream (file ranges are ts
-        // quartiles, TTL is 24 h), so eviction + re-entry stay exercised;
-        // the additive read is slicing-independent (the s1 oracle proves it)
-        val stream = s.readStream.schema(Schemas.turn)
-          .option("maxFilesPerTrigger", "2").parquet(inDir).as[Turn]
         val table = new IcebergLikeTable(s"$tmp/table", 8,
           keyCol = "row_key", emptySchema = Schemas.snapshotGen)
-        withStreamParallelism(s, inDir) {
-          val q = graft.snapshot.SnapshotTtl
-            .updates(stream, watermark = "1 hour", ttlMs = 24L * 3600 * 1000)
-            .writeStream.outputMode("update")
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .foreachBatch(graft.snapshot.SnapshotTtl.sink(table) _)
-            .start()
-          runAndStop(q)
-        }
+        // batches stay time-ordered ([f1,f2] then [f3,f4]): the watermark
+        // still advances mid-stream (file ranges are ts quartiles, TTL is
+        // 24 h), so eviction + re-entry stay exercised
+        drain(s, inDir)(ckpt => graft.snapshot.SnapshotTtl
+          .updates(fileStream(s, inDir, Schemas.turn).as[Turn],
+            watermark = "1 hour", ttlMs = 24L * 3600 * 1000)
+          .writeStream.outputMode("update")
+          .option("checkpointLocation", ckpt)
+          .foreachBatch(graft.snapshot.SnapshotTtl.sink(table) _)
+          .start())
         table
       })
     }
@@ -798,7 +706,7 @@ object StreamQueries {
   }
 
   // ---- streaming windowed aggregation (append mode, watermark-closed) --
-  private val windowCache = new FixtureCache[String]()
+  private val windowCache = new FixtureCache[DataFrame]()
   private val windowStageCache = new FixtureCache[String]()
 
   /** ONE staged (user_id, ts, value) event stream shared by the three
@@ -838,43 +746,25 @@ object StreamQueries {
     * read-back therefore equals the batch aggregation over the events
     * table exactly, which is what the DuckDB oracle checks.
     */
-  private def runWindowPipeline(s: SparkSession, d: String): String =
+  private def runWindowPipeline(s: SparkSession, d: String): DataFrame =
     windowCache.getOrElseUpdate((s, d)) {
-      locally({
-        val tmp = Files.createTempDirectory("graft-window-q").toString
-        val inDir = stagedEventsForWindows(s, d)
-        val schema = org.apache.spark.sql.types.StructType.fromDDL(
-          "ts timestamp, value double")
-        // 2 files/trigger: batches stay time-ordered, the sentinel still
-        // arrives last and flushes every real window (append-mode emission
-        // is watermark-determined, batch-slicing-independent)
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "2").parquet(inDir)
-        val outDir = s"$tmp/out"
-        withStreamParallelism(s, inDir) {
-          val q = stream.withWatermark("ts", "1 minute")
-            .groupBy(window(col("ts"), "5 minutes"))
-            .agg(count(lit(1)).as("n_events"),
-              sum(col("value").cast("decimal(18,2)")).as("value_sum_dec"))
-            .select(unix_seconds(col("window.start")).as("window_start_s"),
-              col("n_events"),
-              col("value_sum_dec").cast("double").as("value_sum"))
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .format("parquet").option("path", outDir)
-            .start()
-          runAndStop(q)
-        }
-        outDir
-      })
+      val inDir = stagedEventsForWindows(s, d)
+      drainToParquet(s, inDir,
+        fileStream(s, inDir, StructType.fromDDL("ts timestamp, value double"))
+          .withWatermark("ts", "1 minute")
+          .groupBy(window(col("ts"), "5 minutes"))
+          .agg(count(lit(1)).as("n_events"),
+            sum(col("value").cast("decimal(18,2)")).as("value_sum_dec"))
+          .select(unix_seconds(col("window.start")).as("window_start_s"),
+            col("n_events"),
+            col("value_sum_dec").cast("double").as("value_sum")))
     }
 
   /** Streaming tumbling window, DuckDB-oracled against the batch SQL —
     * the windowed analog of what s1_stream_snapshot proves for the fold.
     */
   def w1StreamTumbling(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(runWindowPipeline(s, d))
-      .select(col("window_start_s"), col("n_events"), col("value_sum"))
+    runWindowPipeline(s, d)
 
   val w1StreamTumblingSql: String =
     """SELECT CAST(floor(epoch(ts)/300)*300 AS BIGINT) AS window_start_s,
@@ -883,7 +773,7 @@ object StreamQueries {
        FROM events GROUP BY 1"""
 
   // ---- streaming SLIDING windows (append mode, watermark-closed) ------
-  private val slidingCache = new FixtureCache[String]()
+  private val slidingCache = new FixtureCache[DataFrame]()
 
   /** The sliding analog of [[runWindowPipeline]]: 10-minute windows
     * sliding every 5 — each event feeds TWO overlapping windows' state,
@@ -892,41 +782,26 @@ object StreamQueries {
     * watermark, far-future sentinel flushing every real window (the
     * sentinel's own two windows never close and never reach the sink).
     */
-  private def runSlidingPipeline(s: SparkSession, d: String): String =
+  private def runSlidingPipeline(s: SparkSession, d: String): DataFrame =
     slidingCache.getOrElseUpdate((s, d)) {
-      locally({
-        val tmp = Files.createTempDirectory("graft-sliding-q").toString
-        val inDir = stagedEventsForWindows(s, d)
-        val schema = org.apache.spark.sql.types.StructType.fromDDL("ts timestamp")
-        // 2 files/trigger — same rationale as the tumbling drain
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "2").parquet(inDir)
-        val outDir = s"$tmp/out"
-        withStreamParallelism(s, inDir) {
-          val q = stream.withWatermark("ts", "1 minute")
-            .groupBy(window(col("ts"), "10 minutes", "5 minutes"))
-            .agg(count(lit(1)).as("n_events"))
-            .select(unix_seconds(col("window.start")).as("window_start_s"),
-              col("n_events"))
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .format("parquet").option("path", outDir)
-            .start()
-          runAndStop(q)
-        }
-        outDir
-      })
+      val inDir = stagedEventsForWindows(s, d)
+      drainToParquet(s, inDir,
+        fileStream(s, inDir, StructType.fromDDL("ts timestamp"))
+          .withWatermark("ts", "1 minute")
+          .groupBy(window(col("ts"), "10 minutes", "5 minutes"))
+          .agg(count(lit(1)).as("n_events"))
+          .select(unix_seconds(col("window.start")).as("window_start_s"),
+            col("n_events")))
     }
 
   /** Streaming sliding window ≡ the batch w2 (same DuckDB unnest oracle). */
   def w2StreamSliding(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(runSlidingPipeline(s, d))
-      .select(col("window_start_s"), col("n_events"))
+    runSlidingPipeline(s, d)
 
   val w2StreamSlidingSql: String = WindowQueries.w2SlidingSql
 
   // ---- streaming SESSION windows (append mode, watermark-closed) ------
-  private val sessionCache = new FixtureCache[String]()
+  private val sessionCache = new FixtureCache[DataFrame]()
 
   /** The session analog of [[runWindowPipeline]]: file stream (time-
     * ordered micro-batches) → 1-minute watermark → 30-minute-gap
@@ -937,41 +812,23 @@ object StreamQueries {
     * Proves the stateful session-merge path end-to-end against the batch
     * gap-and-sum SQL oracle.
     */
-  private def runSessionPipeline(s: SparkSession, d: String): String =
+  private def runSessionPipeline(s: SparkSession, d: String): DataFrame =
     sessionCache.getOrElseUpdate((s, d)) {
-      locally({
-        val tmp = Files.createTempDirectory("graft-session-q").toString
-        val inDir = stagedEventsForWindows(s, d)
-        val schema = org.apache.spark.sql.types.StructType.fromDDL(
-          "user_id bigint, ts timestamp")
-        // 2 files/trigger — same rationale as the tumbling drain (session
-        // merges across batches are still exercised: 2 data batches)
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "2").parquet(inDir)
-        val outDir = s"$tmp/out"
-        withStreamParallelism(s, inDir) {
-          val q = stream.withWatermark("ts", "1 minute")
-            .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-            .agg(count(lit(1)).as("n_events"))
-            .select(col("user_id"),
-              unix_micros(col("session_window.start")).as("session_start_us"),
-              unix_micros(col("session_window.end")).as("session_end_us"),
-              col("n_events"))
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .format("parquet").option("path", outDir)
-            .start()
-          runAndStop(q)
-        }
-        outDir
-      })
+      val inDir = stagedEventsForWindows(s, d)
+      drainToParquet(s, inDir,
+        fileStream(s, inDir, StructType.fromDDL("user_id bigint, ts timestamp"))
+          .withWatermark("ts", "1 minute")
+          .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+          .agg(count(lit(1)).as("n_events"))
+          .select(col("user_id"),
+            unix_micros(col("session_window.start")).as("session_start_us"),
+            unix_micros(col("session_window.end")).as("session_end_us"),
+            col("n_events")))
     }
 
   /** Streaming session windows, DuckDB-oracled with w3's batch SQL. */
   def w3StreamSession(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(runSessionPipeline(s, d))
-      .select(col("user_id"), col("session_start_us"),
-        col("session_end_us"), col("n_events"))
+    runSessionPipeline(s, d)
 
   // ---- streaming corpus ingestion (content-keyed dedup store) ---------
   private val corpusCache = new FixtureCache[IcebergLikeTable]()
@@ -993,26 +850,19 @@ object StreamQueries {
         val inDir = s"$tmp/in"
         Tables.documents(s, d).select(col("doc_id"), col("text"))
           .repartitionByRange(4, col("doc_id")).write.parquet(inDir)
-        val schema = org.apache.spark.sql.types.StructType.fromDDL(
-          "doc_id bigint, text string")
-        // 2 files/trigger: digest-keyed MERGEs are slicing-independent
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "2").parquet(inDir)
         val table = new IcebergLikeTable(s"$tmp/table", 8, keyCol = "digest",
-          emptySchema = org.apache.spark.sql.types.StructType.fromDDL(
-            "digest string, doc_id bigint"))
-        withStreamParallelism(s, inDir) {
-          val q = stream.writeStream
-            .option("checkpointLocation", s"$tmp/ckpt")
+          emptySchema = StructType.fromDDL("digest string, doc_id bigint"))
+        drain(s, inDir)(ckpt =>
+          fileStream(s, inDir, StructType.fromDDL("doc_id bigint, text string"))
+            .writeStream
+            .option("checkpointLocation", ckpt)
             .foreachBatch { (batch: DataFrame, id: Long) =>
               val deduped = batch.withColumn("digest", md5(col("text")))
                 .groupBy(col("digest")).agg(min(col("doc_id")).as("doc_id"))
               table.merge(deduped, "digest", id)
               ()
             }
-            .start()
-          runAndStop(q)
-        }
+            .start())
         table
       })
     }
@@ -1055,26 +905,19 @@ object StreamQueries {
         // broadcasts KMeans.fit output the same way
         val cents = emb.filter(col("vec_id") < 16)
           .select(col("vec_id").as("cluster"), col("embedding").as("c_emb"))
-        // 2 files/trigger: the ingest stays multi-commit (2 batches, each
-        // an exactly-once MERGE) at half the per-batch merge overhead
-        val stream = s.readStream.schema(emb.schema)
-          .option("maxFilesPerTrigger", "2").parquet(inDir)
         val table = new IcebergLikeTable(s"$tmp/table", 8, keyCol = "vec_key",
-          emptySchema = org.apache.spark.sql.types.StructType.fromDDL(
+          emptySchema = StructType.fromDDL(
             "vec_key string, vec_id bigint, cluster bigint"))
-        withStreamParallelism(s, inDir) {
-          val q = stream.writeStream
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .foreachBatch { (batch: DataFrame, id: Long) =>
-              val assigned = graft.ann.Ann.assignToCentroids(batch, cents)
-                .select(col("vec_id").cast("string").as("vec_key"),
-                  col("vec_id"), col("cluster"), col("embedding"))
-              table.merge(assigned, "vec_key", id)
-              ()
-            }
-            .start()
-          runAndStop(q)
-        }
+        drain(s, inDir)(ckpt => fileStream(s, inDir, emb.schema).writeStream
+          .option("checkpointLocation", ckpt)
+          .foreachBatch { (batch: DataFrame, id: Long) =>
+            val assigned = graft.ann.Ann.assignToCentroids(batch, cents)
+              .select(col("vec_id").cast("string").as("vec_key"),
+                col("vec_id"), col("cluster"), col("embedding"))
+            table.merge(assigned, "vec_key", id)
+            ()
+          }
+          .start())
         table
       })
     }
@@ -1111,10 +954,8 @@ object StreamQueries {
     * join — which is exactly what the DuckDB oracle checks.
     */
   def j3StreamInterval(s: SparkSession, d: String): DataFrame = {
-    val tmp = Files.createTempDirectory("graft-ssjoin-q").toString
     val inDir = stagedTurnsByTs(s, d)
-    def side() = s.readStream.schema(Schemas.turn)
-      .option("maxFilesPerTrigger", "2").parquet(inDir)
+    def side() = fileStream(s, inDir, Schemas.turn)
     val buys = side().filter(col("role") === "purchase")
       .select(col("conv_id"), col("turn_idx").as("buy_idx"),
         col("ts").as("buy_ts"))
@@ -1131,14 +972,7 @@ object StreamQueries {
         col("src_idx").cast("long").as("src_idx"), col("src_role"),
         unix_micros(col("buy_ts")).as("buy_ts_us"),
         unix_micros(col("src_ts")).as("src_ts_us"))
-    withStreamParallelism(s, inDir) {
-      val q = joined.writeStream.outputMode("append")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .format("parquet").option("path", s"$tmp/out")
-        .start()
-      runAndStop(q)
-    }
-    s.read.schema(joined.schema).parquet(s"$tmp/out")
+    drainToParquet(s, inDir, joined)
   }
 
   val j3StreamIntervalSql: String =
@@ -1170,20 +1004,17 @@ object StreamQueries {
         val (src, tmp) = cdcSource(s, d)
         val shards = Seq(0, 1).map(i =>
           i -> new IcebergLikeTable(s"$tmp/shard$i/table", 8))
-        withStreamParallelism(s, s"$tmp/table") {
-          val q = graft.replay.ChangeStream.changes(src).writeStream
-            .option("checkpointLocation", s"$tmp/ckpt_fanout")
-            .foreachBatch { (df: DataFrame, batchId: Long) =>
-              // resolve once per batch, route each key to exactly one shard
-              val up = graft.replay.ChangeStream.resolved(df, src.keyCol)
-              up.persist()
-              try mergeShards(shards, up, batchId)
-              finally { up.unpersist(); () }
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination(600000)
-        }
+        drain(s, src.root)(ckpt => graft.replay.ChangeStream.changes(src).writeStream
+          .option("checkpointLocation", ckpt)
+          .foreachBatch { (df: DataFrame, batchId: Long) =>
+            // resolve once per batch, route each key to exactly one shard
+            val up = graft.replay.ChangeStream.resolved(df, src.keyCol)
+            up.persist()
+            try mergeShards(shards, up, batchId)
+            finally { up.unpersist(); () }
+          }
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start())
         shards
       })
     }
@@ -1241,30 +1072,18 @@ object StreamQueries {
     * is what the DuckDB oracle checks.
     */
   def j4StreamStatic(s: SparkSession, d: String): DataFrame = {
-    val tmp = Files.createTempDirectory("graft-ssdim-q").toString
-    val inDir = s"$tmp/in"
+    val inDir = Files.createTempDirectory("graft-ssdim-q").toString + "/in"
     Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       .repartitionByRange(4, col("event_id")).write.parquet(inDir)
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "event_id bigint, user_id bigint, event_type string, value double")
-    // 2 files/trigger: the stream-static join is stateless per batch —
-    // slicing cannot change the result, only per-batch overhead
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(inDir)
+    val stream = fileStream(s, inDir, StructType.fromDDL(
+      "event_id bigint, user_id bigint, event_type string, value double"))
     val dim = Tables.customer(s, d)
       .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-    val joined = stream.join(broadcast(dim), col("user_id") === col("c_custkey"))
-      .select(col("event_id"), col("user_id"), col("c_name"),
-        col("c_mktsegment"), col("value"))
-    withStreamParallelism(s, inDir) {
-      val q = joined.writeStream.outputMode("append")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .format("parquet").option("path", s"$tmp/out")
-        .start()
-      runAndStop(q)
-    }
-    s.read.schema(joined.schema).parquet(s"$tmp/out")
+    drainToParquet(s, inDir,
+      stream.join(broadcast(dim), col("user_id") === col("c_custkey"))
+        .select(col("event_id"), col("user_id"), col("c_name"),
+          col("c_mktsegment"), col("value")))
   }
 
   val j4StreamStaticSql: String =
@@ -1357,15 +1176,10 @@ object StreamQueries {
 
   private def runOuterInterval(s: SparkSession, d: String,
       mode: String): DataFrame = {
-    val tmp = Files.createTempDirectory("graft-ssouter-q").toString
     val inDir = stagedOuterInput(s, d)
-    // 2 files/trigger: 2 data batches + the sentinel batch + the no-data
-    // finalization batch still exercise cross-batch join state AND
-    // watermark eviction, at half the per-batch state-store commits of
-    // the 1-file form (the drained result is watermark-determined,
-    // batch-slicing-independent — exactly what the oracle proves)
-    def side() = s.readStream.schema(Schemas.turn)
-      .option("maxFilesPerTrigger", "2").parquet(inDir)
+    // 2 data batches + the sentinel batch + the no-data finalization
+    // batch exercise cross-batch join state AND watermark eviction
+    def side() = fileStream(s, inDir, Schemas.turn)
     val buys = side()
       .select(col("conv_id"), col("turn_idx").as("buy_idx"), col("role"),
         col("ts").as("buy_ts"))
@@ -1397,14 +1211,7 @@ object StreamQueries {
           unix_micros(col("buy_ts")).as("buy_ts_us"),
           unix_micros(col("src_ts")).as("src_ts_us"))
     }
-    withStreamParallelism(s, inDir) {
-      val q = joined.writeStream.outputMode("append")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .format("parquet").option("path", s"$tmp/out")
-        .start()
-      runAndStop(q)
-    }
-    s.read.schema(joined.schema).parquet(s"$tmp/out")
+    drainToParquet(s, inDir, joined)
       .filter(col("conv_id") =!= "-1") // sentinel rows (either side)
   }
 
@@ -1458,10 +1265,8 @@ object StreamQueries {
     * the drained sink equals the batch EXISTS — the DuckDB oracle.
     */
   def j6StreamSemi(s: SparkSession, d: String): DataFrame = {
-    val tmp = Files.createTempDirectory("graft-sssemi-q").toString
     val inDir = stagedTurnsByTs(s, d)
-    def side() = s.readStream.schema(Schemas.turn)
-      .option("maxFilesPerTrigger", "2").parquet(inDir)
+    def side() = fileStream(s, inDir, Schemas.turn)
     val buys = side().filter(col("role") === "purchase")
       .select(col("conv_id"), col("turn_idx").as("buy_idx"),
         col("ts").as("buy_ts"))
@@ -1476,14 +1281,7 @@ object StreamQueries {
       "left_semi")
       .select(col("conv_id"), col("buy_idx").cast("long").as("buy_idx"),
         unix_micros(col("buy_ts")).as("buy_ts_us"))
-    withStreamParallelism(s, inDir) {
-      val q = joined.writeStream.outputMode("append")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .format("parquet").option("path", s"$tmp/out")
-        .start()
-      runAndStop(q)
-    }
-    s.read.schema(joined.schema).parquet(s"$tmp/out")
+    drainToParquet(s, inDir, joined)
   }
 
   val j6StreamSemiSql: String =
@@ -1507,31 +1305,18 @@ object StreamQueries {
     * DuckDB oracle checks against the clean events table.
     */
   def dedupStreamWatermark(s: SparkSession, d: String): DataFrame = {
-    val tmp = Files.createTempDirectory("graft-sdedup-q").toString
-    val inDir = s"$tmp/in"
+    val inDir = Files.createTempDirectory("graft-sdedup-q").toString + "/in"
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
     val dups = ev.filter(col("event_id") % 3 === 0)
     ev.unionByName(dups).unionByName(dups)
       .repartitionByRange(4, col("ts")).write.parquet(inDir)
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "event_id bigint, user_id bigint, event_type string, ts timestamp")
-    // 2 files/trigger: with the wide watermark the keyed dedup state sees
-    // every replica whatever the slicing — result is exactly DISTINCT
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(inDir)
-    val out = stream.withWatermark("ts", "3650 days")
+    drainToParquet(s, inDir, fileStream(s, inDir, StructType.fromDDL(
+        "event_id bigint, user_id bigint, event_type string, ts timestamp"))
+      .withWatermark("ts", "3650 days")
       .dropDuplicatesWithinWatermark("event_id")
       .select(col("event_id"), col("user_id"), col("event_type").as("role"),
-        unix_micros(col("ts")).as("ts_us"))
-    withStreamParallelism(s, inDir) {
-      val q = out.writeStream.outputMode("append")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .format("parquet").option("path", s"$tmp/out")
-        .start()
-      runAndStop(q)
-    }
-    s.read.schema(out.schema).parquet(s"$tmp/out")
+        unix_micros(col("ts")).as("ts_us")))
   }
 
   val dedupStreamWatermarkSql: String =
@@ -1557,11 +1342,8 @@ object StreamQueries {
         val replica = new IcebergLikeTable(s"$tmp/mv_replica", 8)
         val mv = new IcebergLikeTable(s"$tmp/mv", 4, keyCol = "last_role",
           emptySchema = graft.pipeline.MaterializedAgg.viewSchema("last_role", sums))
-        withStreamParallelism(s, s"$tmp/table") {
-          val q = graft.pipeline.MaterializedAgg.maintain(
-            src, replica, mv, "last_role", sums, s"$tmp/ckpt_mv")
-          q.awaitTermination(600000)
-        }
+        drain(s, src.root)(ckpt => graft.pipeline.MaterializedAgg.maintain(
+          src, replica, mv, "last_role", sums, ckpt))
         mv
       })
     }
@@ -1595,16 +1377,15 @@ object StreamQueries {
         implicit val sp: SparkSession = s
         val tmp = Files.createTempDirectory("graft-fanout-q").toString
         val inDir = stagedTurnsByTs(s, d)
-        val stream = s.readStream.schema(Schemas.turn)
-          .option("maxFilesPerTrigger", "2").parquet(inDir).as[Turn]
-        val targets = fanoutTargets.map { case (name, roles) =>
-          Fanout.Target(name, col("role").isin(roles: _*),
-            new IcebergLikeTable(s"$tmp/$name/table", 8), s"$tmp/$name/ckpt")
+        val tables = fanoutTargets.map { case (name, _) =>
+          name -> new IcebergLikeTable(s"$tmp/$name/table", 8)
         }
-        withStreamParallelism(s, inDir) {
-          Fanout.runAll(stream, targets, watermark = "3650 days")
-        }
-        fanoutTargets.map(_._1).zip(targets.map(_.table))
+        drainAll(s, inDir)(ckpt => Fanout.start(
+          fileStream(s, inDir, Schemas.turn).as[Turn],
+          fanoutTargets.zip(tables).map { case ((name, roles), (_, table)) =>
+            Fanout.Target(name, col("role").isin(roles: _*), table, s"$ckpt/$name")
+          }, watermark = "3650 days"))
+        tables
       })
     }
 
