@@ -2,7 +2,7 @@ package graft.cep
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues}
+  StatefulProcessor, StatefulProcessorHandle, TTLConfig, TimeMode, TimerValues}
 
 /** The CEP NFA on Spark 4's `transformWithState` — same transition
   * function as [[CepStream]] (the pure [[CepStream.emitAndEvict]]), the
@@ -18,7 +18,8 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode,
   *    moment the watermark passes its anchor's horizon;
   *  - a stale timer firing after its anchors were already flushed is a
   *    no-op by construction (anchors below the boundary are evicted in
-  *    the pass that emits them), so duplicate timers are harmless.
+  *    the pass that emits them); a pass registers its wake-up timer only
+  *    when the key does not hold it yet ([[registerOnce]]).
   *
   * Streaming ≡ fMGWS ≡ batch is one shared transition checked by one
   * oracle (`cep_tws` reuses cep_pattern's SQL).
@@ -28,6 +29,14 @@ object CepTws {
   implicit private val evEnc: Encoder[CepEvent] = Encoders.product[CepEvent]
   implicit private val outEnc: Encoder[CepMatch] = Encoders.product[CepMatch]
   implicit private val strEnc: Encoder[String] = Encoders.STRING
+
+  /** Register an event-time timer for the current key unless it already
+    * holds one at `ts`: a pass that finds the same earliest pending event
+    * would otherwise ask again, and Spark refuses a duplicate with a WARN
+    * after a wasted timer-state lookup.
+    */
+  private[cep] def registerOnce(handle: StatefulProcessorHandle, ts: Long): Unit =
+    if (!handle.listTimers().exists(_ == ts)) handle.registerTimer(ts)
 
   final class CepProcessor(numSteps: Int, withinUs: Long)
       extends StatefulProcessor[String, CepEvent, CepMatch] {
@@ -44,8 +53,7 @@ object CepTws {
       if (kept.nonEmpty) {
         buf.appendList(kept.toArray)
         // wake this key when the earliest pending anchor's horizon passes
-        getHandle.registerTimer(
-          (kept.map(_.tsUs).min + withinUs) / 1000L + 1L)
+        CepTws.registerOnce(getHandle, (kept.map(_.tsUs).min + withinUs) / 1000L + 1L)
       }
       out.iterator
     }

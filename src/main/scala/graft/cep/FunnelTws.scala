@@ -82,7 +82,7 @@ object FunnelTws {
       if (pending.nonEmpty) {
         buf.appendList(pending.toArray)
         // wake when the watermark passes the earliest pending event
-        getHandle.registerTimer(pending.map(_.tsUs).min / 1000L + 1L)
+        CepTws.registerOnce(getHandle, pending.map(_.tsUs).min / 1000L + 1L)
       }
       val seen = prev.seen || all.nonEmpty
       if (seen != prev.seen || ts != prev.ts) {

@@ -32,22 +32,29 @@ final class InvalidOffsetException(msg: String) extends RuntimeException(msg)
 object Replay {
 
   /** S4 validity check #1 — replay-from-offset: the requested batch must
-    * be one the lineage table committed (znap validates the stored offset
-    * against [oldestAvailable, newestAvailable] and fails fast with
-    * InvalidOffsetException, NakadiPublisher.scala:89-100). Resuming from
-    * an unknown batch would silently rebuild from the wrong state.
+    * lie inside the committed lineage window (znap validates the stored
+    * offset against [oldestAvailable, newestAvailable] and fails fast
+    * with InvalidOffsetException, NakadiPublisher.scala:89-100). Resuming
+    * from an unknown batch would silently rebuild from the wrong state.
+    *
+    * The window is metadata, answered like znap's ProgressChecker reads
+    * its offset table (healthcheck/ProgressChecker.scala:95-146): the
+    * manifest names each batch that wrote lineage in its `lineage/v<b>/`
+    * paths ([[IcebergLikeTable.lineageWindow]]), so no Spark job runs.
+    * That equals min/max `batch_id` over the lineage rows because a
+    * merge's lineage rows carry that merge's batchId (the
+    * [[IcebergLikeTable.merge]] contract [[MergeSink.lineageOf]] keeps).
     */
-  def validateReplayBatch(table: IcebergLikeTable, requestedBatchId: Long): Unit = {
-    val range = table.lineage().agg(
-      min(col("batch_id")).as("lo"), max(col("batch_id")).as("hi")).head()
-    if (range.isNullAt(0))
-      throw new InvalidOffsetException(
-        s"replay from batch $requestedBatchId: lineage is empty (nothing committed)")
-    val (lo, hi) = (range.getLong(0), range.getLong(1))
-    if (requestedBatchId < lo || requestedBatchId > hi)
-      throw new InvalidOffsetException(
-        s"replay from batch $requestedBatchId outside committed window [$lo, $hi]")
-  }
+  def validateReplayBatch(table: IcebergLikeTable, requestedBatchId: Long): Unit =
+    table.lineageWindow() match {
+      case None =>
+        throw new InvalidOffsetException(
+          s"replay from batch $requestedBatchId: lineage is empty (nothing committed)")
+      case Some((lo, hi)) if requestedBatchId < lo || requestedBatchId > hi =>
+        throw new InvalidOffsetException(
+          s"replay from batch $requestedBatchId outside committed window [$lo, $hi]")
+      case _ => ()
+    }
 
   /** S4 validity check #2 — resume gap detection: before resuming a fold
     * against a retention-limited source, the oldest still-available turn
@@ -124,9 +131,14 @@ object Replay {
   /** Incremental dump: keys whose snapshot changed after committed batch
     * `sinceBatch` — the scale-friendly form of [[dump]] (a 10^12-turn
     * table republishes a micro-batch's worth of keys, not the world).
-    * The replay point is validated against the committed lineage window
-    * exactly like a replay-from-offset (S4): an unknown since-batch must
-    * fail fast, not silently dump everything or nothing.
+    * The since-batch is checked against the committed lineage window
+    * exactly like a replay-from-offset (S4, [[validateReplayBatch]]): an
+    * unknown since-batch fails fast, never silently dumping everything
+    * or nothing. That check reads the manifest only, so the dump is one
+    * column-pruned scan like [[dump]]: the change read filters
+    * `__seq > sinceBatch` before resolving and reads only the key and
+    * `__seq` — one job on a compacted table, a key-only group-by on a
+    * delta chain ([[IcebergLikeTable.readChangesSince]]).
     */
   def incrementalDump(table: IcebergLikeTable, sinceBatch: Long): DataFrame = {
     validateReplayBatch(table, sinceBatch)

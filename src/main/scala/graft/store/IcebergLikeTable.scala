@@ -72,6 +72,9 @@ object IcebergLikeTable {
     */
   val DeleteCol = "__del"
 
+  /** A lineage file's manifest path, `lineage/v<batchId>/<file>`. */
+  private val LineagePath = "lineage/v(\\d+)/[^/]+".r
+
   /** One resolved row of [[IcebergLikeTable.get]], in Catalyst's internal
     * form, with the committed schema it was read under.
     */
@@ -603,11 +606,22 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
     * [[readChangesSince]] exact across file rewrites.
     */
   private def resolveKeepSeq(df: DataFrame): DataFrame = {
-    val payload = df.columns.filter(c => c != keyCol && c != "__seq") :+ "__seq"
+    import graft.functions.GraftFunctions.latest_by
+    val dc = IcebergLikeTable.DeleteCol
+    val payload = df.columns.filter(c => c != keyCol && c != "__seq" && c != dc) :+ "__seq"
+    // The marker resolves in its own aggregate, so a reader that keeps
+    // only the key and filters on the marker (a keys-only change read
+    // with deletes live) lets Catalyst prune the payload aggregate and
+    // its columns from the scan. Both aggregates pick the same row: their
+    // structs are never null, so latest_by's keep/replace choice depends
+    // only on `__seq`, and both see the same rows in the same order.
+    val markerAgg =
+      if (!df.columns.contains(dc)) Nil
+      else Seq(latest_by(struct(col(dc)), col("__seq")).as("__d"))
     df.groupBy(col(keyCol))
-      .agg(graft.functions.GraftFunctions.latest_by(
-        struct(payload.map(col): _*), col("__seq")).as("__r"))
-      .select(col(keyCol) +: payload.map(c => col(s"__r.$c").as(c)): _*)
+      .agg(latest_by(struct(payload.map(col): _*), col("__seq")).as("__r"), markerAgg: _*)
+      .select((col(keyCol) +: payload.map(c => col(s"__r.$c").as(c))) ++
+        markerAgg.map(_ => col(s"__d.$dc").as(dc)): _*)
       // restore the INPUT column order (key where the schema puts it):
       // without this, read() returns key-first while deltas exist but
       // schema order once compaction empties them — a silent positional
@@ -897,8 +911,22 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
     * with latest seq > sinceBatch has that row in a candidate file;
     * (2) no newer row for a candidate key exists outside the candidates
     * (newer rows live in newer files); (3) old rows carried into a
-    * post-since base by compaction resolve to their true (≤ sinceBatch)
-    * seq and are filtered out.
+    * post-since base by compaction carry their true (≤ sinceBatch) seq.
+    *
+    * How it is read: `__seq > sinceBatch` filters the candidate scan
+    * BEFORE last-writer-wins resolution (the filter pushes into the
+    * Parquet read). That is exact: a key whose latest seq is above
+    * `sinceBatch` keeps that row among the filtered ones, where it still
+    * wins; a key whose latest seq is at or below it keeps no row at all.
+    * When every candidate is a base (the output of a compaction,
+    * rebucket, purge or optimize), resolution is skipped: bases hold one
+    * row per key and buckets partition the keys, so each key has at most
+    * one candidate row — the fact [[read]]'s clean-base path rests on. A
+    * candidate delta still resolves, since [[merge]] does not enforce one
+    * row per key. A caller selecting only the key (an incremental dump)
+    * therefore reads only the key and `__seq` (+ `__del` while markers
+    * may be live): one job on a bases-only table, a key-only group-by
+    * otherwise.
     */
   def readChangesSince(sinceBatch: Long,
       includeDeletes: Boolean = false): DataFrame =
@@ -906,7 +934,8 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
 
   /** The change computation shared by the live and historical forms:
     * candidate files = those whose directory version exceeds `since`;
-    * resolve with preserved seqs; keep rows changed after `since`.
+    * keep their rows changed after `since`; resolve with preserved seqs
+    * unless every candidate is a base (see [[readChangesSince]]).
     */
   private def changesFrom(m: Manifest, sinceBatch: Long,
       includeDeletes: Boolean): DataFrame = {
@@ -916,8 +945,11 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
       val empty = emptyDf(m.tableSchema.getOrElse(emptySchema))
       if (includeDeletes) empty.withColumn(dc, lit(false)) else empty
     } else {
-      val r = resolveKeepSeq(scanWith(m, cand.map(f => s"$root/$f")))
-        .where(col("__seq") > sinceBatch).drop("__seq")
+      val changed = scanWith(m, cand.map(f => s"$root/$f"))
+        .where(col("__seq") > sinceBatch)
+      val bases = m.buckets.values.flatten.toSet
+      val r = (if (cand.forall(bases)) changed else resolveKeepSeq(changed))
+        .drop("__seq")
       if (!includeDeletes) dropDeleted(r)
       else if (r.columns.contains(dc))
         r.withColumn(dc, coalesce(col(dc), lit(false)))
@@ -935,6 +967,21 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
       includeDeletes: Boolean = false): DataFrame = {
     require(sinceBatch <= toBatch, s"empty range ($sinceBatch, $toBatch]")
     changesFrom(retainedManifest(toBatch), sinceBatch, includeDeletes)
+  }
+
+  /** The committed lineage window `[lo, hi]`: the least and greatest
+    * batch whose merge wrote lineage, read from the manifest's
+    * `lineage/v<b>/` paths — no Spark job, no Parquet read. Under
+    * [[merge]]'s contract that a merge's lineage rows carry its
+    * `batchId`, this is min/max `batch_id` over [[lineage]]. None when no
+    * merge wrote lineage.
+    */
+  def lineageWindow(): Option[(Long, Long)] = {
+    val bs = readManifest().lineageFiles.map {
+      case IcebergLikeTable.LineagePath(b) => b.toLong
+      case f => throw new IllegalStateException(s"unrecognized lineage path '$f'")
+    }
+    if (bs.isEmpty) None else Some((bs.min, bs.max))
   }
 
   def lineage(): DataFrame = {
@@ -967,6 +1014,14 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
     * partial write but before the manifest commit leaves orphan files that
     * the checkpoint retry (same batchId) simply overwrites — without this
     * the retry dies on ErrorIfExists and breaks crash-resume.
+    *
+    * `lineageDf` CONTRACT: its rows carry this merge's `batchId` as
+    * `batch_id` (as [[graft.sink.MergeSink.lineageOf]] writes them). The
+    * commit lists them under `lineage/v<batchId>/`, and
+    * [[lineageWindow]] answers the committed window from those paths
+    * alone, with no Parquet read. An empty frame still lists the
+    * schema-only file Spark writes for it, so its batch counts as
+    * committed in [[lineageWindow]] though [[lineage]] has no row for it.
     * Returns true iff the batch was applied.
     */
   def merge(updates: DataFrame, c: String, batchId: Long,

@@ -51,6 +51,81 @@ class PipelineOpsSpec extends SparkSpec {
     Replay.validateReplayBatch(table, hi) // newest: fine
     intercept[InvalidOffsetException] { Replay.validateReplayBatch(table, hi + 1) }
     intercept[InvalidOffsetException] { Replay.validateReplayBatch(table, -1L) }
+    assert(table.lineageWindow() === scanWindow(table))
+  }
+
+  /** The committed window as the lineage Parquet scan gives it. */
+  private def scanWindow(t: IcebergLikeTable): Option[(Long, Long)] = {
+    val r = t.lineage().agg(min($"batch_id"), max($"batch_id")).head()
+    if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
+  }
+
+  /** The window from the manifest equals the scan's, and validation fails
+    * fast just outside it (and on an empty lineage).
+    */
+  private def assertWindow(t: IcebergLikeTable, clue: String): Unit = {
+    val w = t.lineageWindow()
+    assert(w === scanWindow(t), clue)
+    w match {
+      case None =>
+        val e = intercept[InvalidOffsetException] { Replay.validateReplayBatch(t, 0L) }
+        assert(e.getMessage.contains("lineage is empty"), clue)
+      case Some((lo, hi)) =>
+        Replay.validateReplayBatch(t, lo)
+        Replay.validateReplayBatch(t, hi)
+        Seq(lo - 1, hi + 1).foreach { b =>
+          val e = intercept[InvalidOffsetException] { Replay.validateReplayBatch(t, b) }
+          assert(e.getMessage.contains(s"outside committed window [$lo, $hi]"), clue)
+        }
+    }
+  }
+
+  test("the committed window from the manifest equals the lineage scan's") {
+    def lineageRow(b: Long) = Seq(graft.model.LineageRecord(b, 0, "a", 0, "z", 9,
+      1L, new java.sql.Timestamp(1700000000000L + b))).toDF()
+    def rows(b: Long, ks: String*) = ks.map(k => (k, b.toInt)).toDF("conv_id", "n")
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("conv_id string, n int")
+    val t = new IcebergLikeTable(tmpDir("window") + "/t", 2,
+      maxDeltasPerBucket = 3, inlineCompaction = false, emptySchema = schema)
+    assertWindow(t, "empty table")
+    t.merge(rows(0, "a", "b"), "conv_id", 0L) // no lineage
+    assertWindow(t, "merge without lineage")
+    t.merge(rows(1, "a", "c"), "conv_id", 1L, lineageDf = Some(lineageRow(1L)))
+    t.merge(rows(2, "b"), "conv_id", 2L, lineageDf = Some(lineageRow(2L)))
+    assertWindow(t, "merges with lineage")
+    t.merge(rows(3, "d"), "conv_id", 3L) // no lineage: the window stays [1, 2]
+    assertWindow(t, "merge without lineage after lineage")
+    t.delete(Seq("a").toDF("conv_id"), 4L)
+    assertWindow(t, "delete")
+    assert(t.compact())
+    assertWindow(t, "explicit compact")
+    t.merge(rows(5, "e"), "conv_id", 5L, lineageDf = Some(lineageRow(5L)))
+    t.rebucket(5)
+    assertWindow(t, "rebucket")
+    t.purgeDeletes(4L)
+    assertWindow(t, "purgeDeletes")
+    t.vacuum()
+    assertWindow(t, "vacuum")
+    assert(t.lineageWindow() === Some((1L, 5L)))
+
+    // inline compaction, fed by a MergeSink-shaped lineage per batch
+    val inline = new IcebergLikeTable(tmpDir("window-inline") + "/t", 2,
+      maxDeltasPerBucket = 1, emptySchema = schema)
+    (0L until 3L).foreach { b =>
+      inline.merge(rows(b, "a", "b", "c"), "conv_id", b,
+        lineageDf = Some(MergeSink.lineageOf(rows(b, "a", "b", "c")
+          .withColumn("last_turn_idx", lit(0)).withColumn("last_ts", current_timestamp()), b)))
+    }
+    assert(inline.readManifest().deltas.values.forall(_.isEmpty))
+    assertWindow(inline, "inline compaction")
+
+    // An empty lineage frame: Spark still writes one schema-only file, so
+    // the manifest counts the batch as committed while the scan has no
+    // row for it — the one place the two answers differ.
+    t.merge(rows(6, "f"), "conv_id", 6L, lineageDf = Some(lineageRow(6L).limit(0)))
+    assert(t.lineageWindow() === Some((1L, 6L)))
+    assert(scanWindow(t) === Some((1L, 5L)))
+    Replay.validateReplayBatch(t, 6L)
   }
 
   test("resume against a source whose retention expired past the committed state fails fast") {

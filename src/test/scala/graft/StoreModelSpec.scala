@@ -6,8 +6,10 @@ import graft.store.IcebergLikeTable
 /** Model-based fuzz of the store: random interleavings of merge /
   * delete / compact / vacuum / rebucket checked after EVERY op against an
   * in-memory model — current state, point lookups (the lazy `lookup` and
-  * the driver-side `get`), change feed, and retained time travel all stay
-  * exact under any maintenance schedule. Deterministic seeds; both
+  * the driver-side `get`), change feed (upsert-only and with delete
+  * markers; compactions and rebuckets reach its bases-only path, delta
+  * chains and markers its resolving one), and retained time travel all
+  * stay exact under any maintenance schedule. Deterministic seeds; both
   * inline- and deferred-compaction tables.
   */
 class StoreModelSpec extends SparkSpec {
@@ -32,6 +34,7 @@ class StoreModelSpec extends SparkSpec {
 
     var model = Map.empty[String, Int]
     var changedAt = Map.empty[String, Long]
+    var deletedAt = Map.empty[String, Long]
     var history = Map.empty[Long, Map[String, Int]]
     var version = -1L
     var deleted = Set.empty[String]
@@ -40,6 +43,12 @@ class StoreModelSpec extends SparkSpec {
       t.read().as[(String, Int)].collect().toMap
     def changes(since: Long): Map[String, Int] =
       t.readChangesSince(since).as[(String, Int)].collect().toMap
+    // (value, deleted) per key: a marker row carries no value
+    def changesWithDeletes(since: Long): Map[String, (Option[Int], Boolean)] =
+      t.readChangesSince(since, includeDeletes = true)
+        .select("conv_id", "n", IcebergLikeTable.DeleteCol)
+        .as[(String, Option[Int], Boolean)].collect()
+        .map { case (k, v, d) => k -> (v, d) }.toMap
     def asOf(v: Long): Map[String, Int] =
       t.readAsOf(v).as[(String, Int)].collect().toMap
     def lookup(k: String): Option[Int] =
@@ -66,6 +75,7 @@ class StoreModelSpec extends SparkSpec {
         assert(t.delete(ks.toDF("conv_id"), version))
         model = model -- ks
         deleted = deleted ++ ks
+        ks.foreach(k => deletedAt += k -> version)
         history += version -> model
       } else if (op == 0) t.compact()
       else if (op == 1) t.vacuum()
@@ -76,6 +86,13 @@ class StoreModelSpec extends SparkSpec {
       assert(changes(since) ==
         model.filter { case (k, _) => changedAt.getOrElse(k, -2L) > since },
         s"seed=$seed step=$step changesSince($since)")
+      val lastChange = (changedAt.keySet ++ deletedAt.keySet).map(k =>
+        k -> math.max(changedAt.getOrElse(k, -2L), deletedAt.getOrElse(k, -2L))).toMap
+      assert(changesWithDeletes(since) ==
+        lastChange.collect { case (k, v) if v > since =>
+          k -> model.get(k).fold[(Option[Int], Boolean)]((None, true))(n => (Some(n), false))
+        },
+        s"seed=$seed step=$step changesSince($since, includeDeletes)")
       val k = keys(rnd.nextInt(keys.size))
       assert(lookup(k) == model.get(k), s"seed=$seed step=$step lookup($k)")
       // the driver-side read against the model and against `lookup`: a
