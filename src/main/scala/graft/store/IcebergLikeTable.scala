@@ -1,6 +1,8 @@
 package graft.store
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path,
+  Paths, StandardCopyOption}
+import scala.annotation.tailrec
 import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -11,11 +13,12 @@ import graft.model.Schemas
 
 /** Iceberg-*shaped* snapshot table (SURVEY.md §7.0, §7.3): Parquet data
   * files laid out in hash buckets `bucket = pmod(hash(key), B)` plus an
-  * atomic JSON-ish manifest that is the single source of truth for which
-  * files are live. Commit = write-temp + atomic rename, exactly the
-  * visibility contract `MERGE INTO` gives on a real Iceberg table (no
-  * Iceberg runtime jar exists in this image; the interface is drop-in
-  * replaceable).
+  * a log of immutable, numbered manifests that is the single source of
+  * truth for which files are live. Commit = publish manifest number
+  * head + 1 with an exclusive create (a hard link, see [[publish]]): the
+  * visibility contract `MERGE INTO` gives on a real Iceberg table, and
+  * the Delta Lake log's compare-and-swap (no Iceberg or Delta runtime jar
+  * exists in this image; the interface is drop-in replaceable).
   *
   * znap analog: the DynamoDB KV snapshot table
   * (reference: persistence/dynamo/DynamoDBEventsWriter.scala:32-53) — but
@@ -72,6 +75,9 @@ object IcebergLikeTable {
     */
   val DeleteCol = "__del"
 
+  /** A published log entry's file name, `<commit>.manifest`. */
+  private val EntryName = "(\\d+)\\.manifest".r
+
   /** A lineage file's manifest path, `lineage/v<batchId>/<file>`. */
   private val LineagePath = "lineage/v(\\d+)/[^/]+".r
 
@@ -92,7 +98,7 @@ object IcebergLikeTable {
     * a deployment error, not a default-config table.
     */
   def open(root: String, inlineCompaction: Boolean = true,
-      keyBloomNdv: Option[Long] = None, autoVacuum: Boolean = true,
+      keyBloomNdv: Option[Long] = None,
       maxDeltasPerBucket: Int = 8, retainManifests: Int = 2)(
       implicit spark: SparkSession): IcebergLikeTable = {
     // existence check BEFORE any table construction: the constructor
@@ -110,7 +116,6 @@ object IcebergLikeTable {
       numBuckets = m.bucketCount.getOrElse(8),
       keyCol = m.keyColOpt.getOrElse("conv_id"),
       maxDeltasPerBucket = maxDeltasPerBucket,
-      autoVacuum = autoVacuum,
       emptySchema = m.tableSchema.getOrElse(Schemas.snapshot),
       retainManifests = retainManifests,
       inlineCompaction = inlineCompaction,
@@ -122,121 +127,34 @@ object IcebergLikeTable {
 
 final class IcebergLikeTable(val root: String, val numBuckets: Int,
     val keyCol: String = "conv_id", val maxDeltasPerBucket: Int = 8,
-    val autoVacuum: Boolean = true, val emptySchema: StructType = Schemas.snapshot,
+    val emptySchema: StructType = Schemas.snapshot,
     val retainManifests: Int = 2, val inlineCompaction: Boolean = true,
-    val maxDeltaBytesPerBucket: Long = Long.MaxValue,
     val statsCol: Option[String] = None,
     val keyBloomNdv: Option[Long] = None,
     val appendOnly: Boolean = false)(
     implicit spark: SparkSession) {
 
+  /** The head hint: a copy of a recent log entry, replaced by rename
+    * after every publish. It only tells [[readManifest]] where to start
+    * reading the log; it is never the compare-and-swap.
+    */
   private val manifestPath: Path = Paths.get(root, "manifest.json")
+  private val logDir: Path = Paths.get(root, "log")
   Files.createDirectories(Paths.get(root, "data"))
-
-  // ---- commit lock ---------------------------------------------------
-  /** Exclusive commit lock (O_EXCL file create — atomic on POSIX): held
-    * around every manifest mutation's read-check-rename. With the
-    * pre-swap fence in [[commitManifest]] this narrows the split-brain
-    * window to the microseconds between a passed ownership re-check and
-    * the rename landing, reachable only after a holder pauses longer
-    * than LockStaleMs (GC/IO stall) AND loses the break race — not a
-    * byte-for-byte CAS, which a plain filesystem cannot express; a real
-    * deployment delegates that final word to its catalog. This is the
-    * local analog of the catalog CAS a real deployment delegates to
-    * (Iceberg: the catalog's atomic swap; znap: DynamoDB conditional
-    * writes, reference persistence/dynamo/DynamoDBEventsWriter.scala:25-53).
-    * Data-file writes stay OUTSIDE the lock — only the metadata swap
-    * serializes, so lock hold time is O(manifest), never O(batch).
-    *
-    * A lock older than [[LockStaleMs]] is presumed orphaned by a crashed
-    * holder and broken; acquisition gives up loudly after [[LockWaitMs]].
-    */
-  private val lockPath: Path = Paths.get(root, "commit.lock")
-  private val LockWaitMs = 60000L
-  private val LockStaleMs = 60000L
-
-  /** Token of the lock THIS thread holds (null outside withCommitLock):
-    * lets [[commitManifest]] re-verify ownership immediately before the
-    * manifest swap — the fencing check that turns a stale-break race
-    * into a loud abort instead of a split-brain commit.
-    */
-  private val holderToken = new ThreadLocal[String]
-
-  private def ownsLock(token: String): Boolean =
-    try new String(Files.readAllBytes(lockPath),
-      java.nio.charset.StandardCharsets.UTF_8) == token
-    catch { case _: java.io.IOException => false }
-
-  /** The lock file carries its owner's unique token, so (a) release
-    * deletes the lock ONLY while it still holds this acquisition's token
-    * — a slow-but-alive holder whose lock was broken as stale can no
-    * longer destroy its successor's lock on the way out — and (b) a
-    * stale break is an atomic RENAME to a unique name (exactly one of N
-    * concurrent breakers wins; delete-then-create would admit several).
-    */
-  private[store] def withCommitLock[A](body: => A): A = {
-    val token = java.util.UUID.randomUUID().toString
-    val deadline = System.currentTimeMillis() + LockWaitMs
-    var held = false
-    while (!held) {
-      try {
-        Files.write(lockPath, token.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8),
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        held = true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          try {
-            val age = System.currentTimeMillis() -
-              Files.getLastModifiedTime(lockPath).toMillis
-            if (age > LockStaleMs) {
-              // Token-verified break: between the age check and the
-              // rename, the stale holder can release and a NEW writer
-              // acquire — blind rename-then-delete would destroy the
-              // fresh lock (its innocent commit then aborts at the
-              // fence). Read the stale token first; if the renamed file
-              // carries a DIFFERENT one, we stole a fresh lock — put it
-              // back. (If the restore itself loses a race to a third
-              // writer's CREATE_NEW, the fence still catches it loudly —
-              // the unrepairable case degrades to the old behavior.)
-              val staleTok = new String(Files.readAllBytes(lockPath),
-                java.nio.charset.StandardCharsets.UTF_8)
-              val broken = Paths.get(root, s"commit.lock.broken-$token")
-              Files.move(lockPath, broken) // atomic: one breaker wins
-              val brokenTok = new String(Files.readAllBytes(broken),
-                java.nio.charset.StandardCharsets.UTF_8)
-              if (brokenTok == staleTok) Files.deleteIfExists(broken)
-              else try Files.move(broken, lockPath)
-              catch { case _: java.io.IOException =>
-                Files.deleteIfExists(broken) }
-            }
-          } catch { case _: java.io.IOException => () } // released / lost the break race
-          if (System.currentTimeMillis() > deadline)
-            throw new java.util.ConcurrentModificationException(
-              s"commit lock $lockPath held for > ${LockWaitMs}ms — " +
-                "another writer is stuck or the lock is orphaned")
-          Thread.sleep(5)
-      }
-    }
-    holderToken.set(token)
-    try body finally {
-      holderToken.remove()
-      // delete only OUR lock: if a breaker renamed it away, lockPath is
-      // absent or holds the successor's token and must be left alone
-      if (ownsLock(token)) Files.deleteIfExists(lockPath)
-    }
-  }
+  Files.createDirectories(logDir)
 
   // ---- manifest ------------------------------------------------------
   /** lastBatchId = -1 means "empty table". `buckets` are the compacted
     * base files; `deltas` the per-bucket ordered delta files appended
-    * since that bucket's last compaction.
+    * since that bucket's last compaction. `commit` is the manifest's
+    * number in the log (`log/<commit>.manifest`); -1 before the first
+    * commit.
     */
-  /** `removed` is the tombstone log: data files superseded by some commit
-    * but possibly still referenced by a retained versioned manifest (time
-    * travel). Incremental GC deletes a tombstoned file — and drops its log
-    * entry — once no retained manifest references it, so per-commit GC
-    * cost is O(tombstones + R small manifests), never O(files-on-disk).
+  /** `removed` is the tombstone list: data files superseded by some commit
+    * but possibly still referenced by a retained log entry (time travel).
+    * Incremental GC deletes a tombstoned file — and drops it from the
+    * list — once no retained entry references it, so per-commit GC cost
+    * is O(tombstones + retained entries), never O(files-on-disk).
     */
   /** `tableSchema` is the committed table schema (Iceberg's schema-in-
     * metadata): reads apply it explicitly, so scans never probe parquet
@@ -262,7 +180,7 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
   /** `keyColOpt` / `statsColOpt` / `appendOnlyOpt` persist the table's
     * CONTRACT (like `bucketCount`): the resolution key, the stats column
     * files are range-pruned on, and the append-only declaration. Stamped
-    * by [[commitManifest]] from the committing writer's config; read back
+    * by [[stamped]] from the committing writer's config; read back
     * by [[IcebergLikeTable.open]] so an out-of-band process (Maintain's
     * compact / optimize / rebucket / purge-deletes rewrites) resolves by
     * the RIGHT key and keeps enriching per-file stats — before these were
@@ -290,7 +208,8 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
       purgedDeletesTo: Long = -1L,
       keyColOpt: Option[String] = None,
       statsColOpt: Option[String] = None,
-      appendOnlyOpt: Option[Boolean] = None) {
+      appendOnlyOpt: Option[Boolean] = None,
+      commit: Long = -1L) {
     def dataFiles: Seq[String] =
       (buckets.values.flatten ++ deltas.values.flatten).toSeq
     def hasDeletes: Boolean = lastDeleteBatch > purgedDeletesTo
@@ -304,28 +223,63 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
   /** The current committed bucket count. */
   def currentBuckets(): Int = bucketsOf(readManifest())
 
-  def readManifest(): Manifest =
-    if (!Files.exists(manifestPath)) Manifest(-1L, Map.empty, Map.empty, Nil, Nil)
-    else parseManifest(Files.readString(manifestPath))
-
-  /** Parse a (possibly concurrently-expired) versioned manifest: a commit
-    * landing between the caller's listing and this read may have GC'd the
-    * file — an expired version's uniquely-referenced files are
-    * legitimately collectable, so "gone" safely reads as "no references".
+  /** The head of the log: the hint, then forward while the next entry
+    * exists — two `stat`s when the hint is current. A hint whose own entry
+    * is gone (far stale) cannot anchor that walk; the newest listed entry
+    * does. Log GC deletes entries oldest first, so no entry newer than a
+    * surviving one is ever missing, and the walk cannot stop early.
     */
-  private def parseManifestIfExists(p: Path): Option[Manifest] =
-    try { if (Files.exists(p)) Some(parseManifest(Files.readString(p))) else None }
-    catch { case _: java.nio.file.NoSuchFileException => None }
+  def readManifest(): Manifest =
+    readIfExists(manifestPath).flatMap(forward).getOrElse(newestListed())
+
+  /** `m` followed to the last entry after it, or None once `m`'s own
+    * entry is gone (GC may then have taken entries after it too).
+    */
+  @tailrec private def forward(m: Manifest): Option[Manifest] =
+    readIfExists(entryPath(m.commit + 1)) match {
+      case Some(next) => forward(next)
+      case None => if (Files.exists(entryPath(m.commit))) Some(m) else None
+    }
+
+  @tailrec private def newestListed(): Manifest = logNumbers().lastOption match {
+    case None => Manifest(-1L, Map.empty, Map.empty, Nil, Nil)
+    case Some(n) => readIfExists(entryPath(n)).flatMap(forward) match {
+      case Some(m) => m
+      case None => newestListed() // collected meanwhile: list again
+    }
+  }
+
+  private def entryPath(commit: Long): Path = logDir.resolve(s"$commit.manifest")
+
+  /** Numbers of the published log entries, ascending (temps excluded). */
+  private def logNumbers(): Seq[Long] = {
+    val ls = Files.list(logDir)
+    try ls.iterator().asScala.map(_.getFileName.toString).collect {
+      case IcebergLikeTable.EntryName(n) => n.toLong
+    }.toSeq.sorted
+    finally ls.close()
+  }
+
+  /** Parse a manifest file, or None when it is gone: a commit landing
+    * between the caller's listing and this read may have GC'd an expired
+    * entry, whose uniquely-referenced files are legitimately collectable,
+    * so "gone" safely reads as "no references".
+    */
+  private def readIfExists(p: Path): Option[Manifest] =
+    try Some(parseManifest(Files.readString(p)))
+    catch { case _: NoSuchFileException => None }
 
   private def parseManifest(s: String): Manifest = {
     // format (one entry per line, written by renderManifest):
     //   lastBatchId=<n>
+    //   commit=<c>                     (log entry number)
     //   lineage=<f1>,<f2>
     //   signals=<f1>,<f2>
     //   bucket:<id>=<f1>,<f2>,...      (compacted base)
     //   delta:<id>=<f1>,<f2>,...       (merge-on-read deltas, seq order)
     val lines = s.split("\n").filter(_.nonEmpty)
     var last = -1L
+    var commit = -1L
     val buckets = scala.collection.mutable.Map[Int, Seq[String]]()
     val deltas = scala.collection.mutable.Map[Int, Seq[String]]()
     var lineage: Seq[String] = Nil
@@ -342,6 +296,7 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
     val stats = scala.collection.mutable.Map[String, (Long, Long)]()
     lines.foreach {
       case l if l.startsWith("lastBatchId=") => last = l.substring(12).toLong
+      case l if l.startsWith("commit=") => commit = l.substring(7).toLong
       case l if l.startsWith("schema=") =>
         schemaOpt = Some(org.apache.spark.sql.types.DataType
           .fromJson(l.substring(7)).asInstanceOf[StructType])
@@ -383,12 +338,13 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
     Manifest(last, ListMap(buckets.toSeq.sortBy(_._1): _*),
       ListMap(deltas.toSeq.sortBy(_._1): _*), lineage, signals, removed,
       schemaOpt, bucketsOpt, dropped, stats.toMap, lastDel, purgedTo,
-      keyOpt, statsColO, appendO)
+      keyOpt, statsColO, appendO, commit)
   }
 
   private def renderManifest(m: Manifest): String = {
     val sb = new StringBuilder
     sb.append(s"lastBatchId=${m.lastBatchId}\n")
+    sb.append(s"commit=${m.commit}\n")
     m.tableSchema.foreach(s => sb.append(s"schema=${s.json}\n"))
     m.bucketCount.foreach(n => sb.append(s"numBuckets=$n\n"))
     m.keyColOpt.foreach(k => sb.append(s"keyCol=$k\n"))
@@ -417,124 +373,111 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
     sb.toString
   }
 
-  /** Atomic commit: temp file + rename (same-dir rename is atomic on the
-    * local FS; on object stores this is the metadata-swap an Iceberg
-    * catalog performs).
+  // ---- commit protocol ---------------------------------------------------
+  /** The one commit protocol: publish `next(head)` as log entry
+    * `head.commit + 1`. The entry is written in full to a temp file under
+    * `log/` and published with `link(2)`, which fails with EEXIST when
+    * another writer already won the number — an atomic compare-and-swap
+    * on a POSIX filesystem, so no reader ever sees a partly written entry
+    * and no lock is needed. This is the local analog of the catalog CAS a
+    * real deployment delegates to (Iceberg: the catalog's atomic swap;
+    * Delta: the log's exclusive create; znap: DynamoDB conditional
+    * writes, reference persistence/dynamo/DynamoDBEventsWriter.scala:25-53).
+    * A loser re-reads the head and calls `next` on it again, so `next`
+    * decides between a conflict (throw) and a rebase. The winner then
+    * replaces the head hint by temp + rename. Data files are written
+    * before, so only this metadata step races.
     */
-  /** `writeVersioned = false` is for metadata-only commits at the SAME
-    * lastBatchId that must not rewrite that version's history entry —
-    * [[dropColumn]]: overwriting manifest-v<id> with the post-drop schema
-    * would destroy pre-drop time travel. (Compaction/rebucket overwrite
-    * legitimately: same logical content, new layout.)
+  @tailrec private def publish(head: Manifest)(next: Manifest => Manifest): Unit = {
+    val entry = stamped(head, next(head))
+    val tmp = stage(entry)
+    // A base whose own entry is gone was collected, and so may the number
+    // after it have been: linking that number would publish an entry
+    // behind the head. An empty base is current only while the log is.
+    val baseAlive =
+      if (head.commit < 0) logNumbers().isEmpty else Files.exists(entryPath(head.commit))
+    val won = baseAlive &&
+      (try { Files.createLink(entryPath(entry.commit), tmp); true }
+       catch { case _: FileAlreadyExistsException => false })
+    Files.delete(tmp)
+    if (won) Files.move(stage(entry), manifestPath, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+    else publish(readManifest())(next)
+  }
+
+  /** Write `entry` to a fresh temp under `log/`. Readers never see it:
+    * they look only at `<n>.manifest` names.
     */
-  private[store] def commitManifest(m: Manifest, writeVersioned: Boolean = true): Unit = {
-    // Contract guard + stamp (see Manifest.keyColOpt doc): a writer whose
-    // key / stats config contradicts the committed contract must fail
-    // BEFORE the swap — a wrong-key rewrite resolves last-writer-wins by
-    // the wrong column (data loss); a stats-blind rewrite silently strips
-    // every per-file range stat. appendOnly is sticky-FALSE: a writer not
-    // declaring it demotes the table, so readers stop taking the exact
-    // delta-bearing range path a violating update would have poisoned.
-    val disk = parseManifestIfExists(manifestPath)
-    disk.flatMap(_.keyColOpt).foreach { k =>
+  private[store] def stage(entry: Manifest): Path = {
+    val tmp = logDir.resolve(s"${entry.commit}.${java.util.UUID.randomUUID()}.tmp")
+    Files.writeString(tmp, renderManifest(entry))
+    tmp
+  }
+
+  /** `m` numbered as the entry after `base`, with the table contract
+    * stamped in (see Manifest.keyColOpt doc): a writer whose key / stats
+    * config contradicts the committed contract fails BEFORE publishing —
+    * a wrong-key rewrite resolves last-writer-wins by the wrong column
+    * (data loss); a stats-blind rewrite silently strips every per-file
+    * range stat. appendOnly is sticky-FALSE: a writer not declaring it
+    * demotes the table, so readers stop taking the exact delta-bearing
+    * range path a violating update would have poisoned.
+    */
+  private def stamped(base: Manifest, m: Manifest): Manifest = {
+    base.keyColOpt.foreach { k =>
       if (k != keyCol) throw new IllegalStateException(
         s"table contract: manifest key column '$k' != this writer's " +
           s"'$keyCol' — open the table via IcebergLikeTable.open(root)")
     }
-    disk.flatMap(_.statsColOpt).foreach { c =>
+    base.statsColOpt.foreach { c =>
       if (!statsCol.contains(c)) throw new IllegalStateException(
         s"table contract: manifest statsCol '$c' != this writer's " +
           s"'${statsCol.getOrElse("<none>")}' — a rewrite would strip " +
           "per-file range stats; open the table via IcebergLikeTable.open(root)")
     }
-    val stamped = m.copy(
+    m.copy(
       keyColOpt = Some(keyCol),
       statsColOpt = statsCol.orElse(m.statsColOpt),
-      appendOnlyOpt =
-        Some(appendOnly && disk.flatMap(_.appendOnlyOpt).getOrElse(true)))
-    commitStamped(stamped, writeVersioned)
+      appendOnlyOpt = Some(appendOnly && base.appendOnlyOpt.getOrElse(true)),
+      commit = base.commit + 1)
   }
 
-  private def commitStamped(m: Manifest, writeVersioned: Boolean): Unit = {
-    // Atomic main swap FIRST — it alone gates visibility. The versioned
-    // copy (time travel / snapshot history, the Iceberg snapshot-log
-    // analog) follows, also via temp + ATOMIC_MOVE: a crash between the
-    // two writes leaves a committed batch with no history entry (time
-    // travel to it fails cleanly) — never a history entry for an
-    // uncommitted batch, which the old order could expose via readAsOf.
-    val tmp = Paths.get(root, s"manifest.tmp.${m.lastBatchId}")
-    Files.writeString(tmp, renderManifest(m))
-    // Fencing: if this thread entered under the commit lock but the lock
-    // was since broken as stale (the holder outlived LockStaleMs), a
-    // successor may already be committing — abort loudly rather than
-    // swap a manifest computed from a superseded snapshot.
-    val tok = holderToken.get
-    if (tok != null && !ownsLock(tok)) {
-      Files.deleteIfExists(tmp)
-      throw new java.util.ConcurrentModificationException(
-        "commit lock lost (broken as stale) before the manifest swap — " +
-          "re-run against the current state")
-    }
-    Files.move(tmp, manifestPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    if (writeVersioned) {
-      // Same-version maintenance commits (compact/rebucket/vacuum at an
-      // unchanged lastBatchId) legitimately rewrite this version's FILE
-      // LAYOUT — but must not rewrite the SCHEMA the version had: after a
-      // dropColumn (which deliberately skipped its versioned write), the
-      // retained history entry still carries the pre-drop schema, and
-      // time travel keeps restoring the column (values until a rewrite
-      // ages the bytes out; nulls after — the retention contract).
-      val vPath = Paths.get(root, s"manifest-v${m.lastBatchId}.json")
-      val vm =
-        if (Files.exists(vPath)) {
-          val prev = parseManifest(Files.readString(vPath))
-          m.copy(tableSchema = prev.tableSchema.orElse(m.tableSchema),
-            droppedColumns = prev.droppedColumns)
-        } else m
-      val vTmp = Paths.get(root, s"manifest.vtmp.${m.lastBatchId}")
-      Files.writeString(vTmp, renderManifest(vm))
-      Files.move(vTmp, vPath,
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
-
-  /** Committed batch ids with a retained versioned manifest, ascending.
-    * Versioned files beyond the committed lastBatchId (plantable only by
-    * external interference — the commit ordering above cannot produce
-    * them) are excluded: they are not history.
+  /** The retained log entries up to `head`, oldest first; entries
+    * collected during the read are skipped. Batch ids never decrease
+    * along the log: a merge raises its base's, every other commit keeps it.
     */
-  def manifestVersions(): Seq[Long] = {
-    val last = readManifest().lastBatchId
-    val ls = Files.list(Paths.get(root))
-    try ls.iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(n => n.startsWith("manifest-v") && n.endsWith(".json"))
-      .map(_.stripPrefix("manifest-v").stripSuffix(".json").toLong)
-      .filter(_ <= last)
-      .toSeq.sorted
-    finally ls.close()
-  }
+  private def history(head: Manifest): Seq[Manifest] =
+    logNumbers().filter(_ <= head.commit).flatMap(n => readIfExists(entryPath(n)))
+
+  /** Committed batch ids with a retained log entry, ascending. */
+  def manifestVersions(): Seq[Long] = history(readManifest()).map(_.lastBatchId).distinct
 
   /** Time travel: the table as of committed batch `batchId` (Iceberg
     * `VERSION AS OF`; znap's replay-to-offset made a storage-layer
-    * feature). Valid while the version's manifest survives retention —
-    * vacuum keeps the last [[retainManifests]] versions' files, exactly
-    * like Iceberg's expire_snapshots bounds its history.
+    * feature). Valid while the batch's log entries survive retention —
+    * GC keeps every entry of the last [[retainManifests]] batch ids and
+    * their files, exactly like Iceberg's expire_snapshots bounds its
+    * history.
     */
   def readAsOf(batchId: Long): DataFrame = scanResolved(retainedManifest(batchId))
 
-  /** The retained versioned manifest of `batchId`, or a loud failure once
-    * retention expired it (shared by [[readAsOf]]/[[readChangesBetween]]).
+  /** The table as committed at `batchId`: the file layout of the newest
+    * entry at that batch (same-batch maintenance rewrites the layout, not
+    * the content) under the schema and dropped columns of the entry that
+    * committed the batch, so a later [[dropColumn]] at the same batch id
+    * keeps the column for time travel (values until a rewrite ages the
+    * bytes out; nulls after — the retention contract). Fails loudly once
+    * retention expired the batch (shared by
+    * [[readAsOf]]/[[readChangesBetween]]).
     */
   private def retainedManifest(batchId: Long): Manifest = {
-    val vPath = Paths.get(root, s"manifest-v$batchId.json")
-    val parsed =
-      if (batchId > readManifest().lastBatchId) None
-      else parseManifestIfExists(vPath)
-    parsed.getOrElse(throw new IllegalArgumentException(
+    val log = history(readManifest())
+    val at = log.filter(_.lastBatchId == batchId)
+    if (at.isEmpty) throw new IllegalArgumentException(
       s"no committed retained manifest for batch $batchId " +
-        s"(retained: ${manifestVersions().mkString(",")})"))
+        s"(retained: ${log.map(_.lastBatchId).distinct.mkString(",")})")
+    at.last.copy(tableSchema = at.head.tableSchema,
+      droppedColumns = at.head.droppedColumns)
   }
 
   /** Snapshot read of a manifest: schema-stable empty frame, clean-base
@@ -1199,8 +1142,7 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
     require(cur.exists(_.name == name), s"no such column '$name'")
     commitAndGc(m, m.copy(
       tableSchema = Some(StructType(cur.filterNot(_.name == name))),
-      droppedColumns = (m.droppedColumns :+ name).distinct),
-      writeVersioned = false) // same lastBatchId: must not rewrite that version's history
+      droppedColumns = (m.droppedColumns :+ name).distinct))
   }
 
   /** Bucket-count evolution (Iceberg partition-spec evolution, bucket
@@ -1246,17 +1188,11 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
       deltas = Map.empty, bucketCount = Some(newBuckets)))
   }
 
-  /** Compaction trigger: file COUNT (read-amplification bound — a point
-    * read opens base + all deltas) OR total delta BYTES (write/merge
-    * amplification bound — at scale a few huge deltas cost more to
-    * resolve than many empty ones; count alone misses that). Byte sizes
-    * come from the filesystem driver-side, O(delta files of the bucket)
-    * per check — bounded by the count threshold itself.
+  /** Compaction trigger: the delta file COUNT — the read-amplification
+    * bound, since a point read opens base + all deltas.
     */
   private def needsCompaction(deltaFiles: Seq[String]): Boolean =
-    deltaFiles.size >= maxDeltasPerBucket ||
-      (maxDeltaBytesPerBucket != Long.MaxValue && deltaFiles.nonEmpty &&
-        deltaFiles.map(f => Files.size(Paths.get(root, f))).sum >= maxDeltaBytesPerBucket)
+    deltaFiles.size >= maxDeltasPerBucket
 
   /** Rewrite buckets whose delta chain reached the compaction trigger:
     * base ∪ deltas resolved → new base for those buckets only.
@@ -1391,26 +1327,34 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
   }
 
   /** Commit `next` and run incremental GC: files `prev` referenced but
-    * `next` doesn't enter the tombstone log; tombstones no retained
-    * versioned manifest references any more are deleted (with their log
-    * entry) and versioned manifests beyond the retention window expire.
-    * Cost: O(tombstones) + parsing ≤ retainManifests small manifests —
-    * never a data/ tree walk ([[vacuum]] remains for deep cleans of
-    * crash orphans).
+    * `next` doesn't enter the tombstone list; tombstones no retained log
+    * entry references any more are deleted (and leave the list), and
+    * entries beyond the retention window expire. Cost: O(tombstones) +
+    * parsing the retained entries — never a data/ tree walk ([[vacuum]]
+    * remains for deep cleans of crash orphans).
+    *
+    * Optimistic concurrency: `next` was computed from `prev`. When
+    * [[publish]] loses because another writer committed meanwhile (an
+    * out-of-band Maintain compact/rebucket racing the streaming writer),
+    * the new head must match `prev` in batch, file set, schema, dropped
+    * columns and bucket count, or this throws and the operation is safe
+    * to re-run against the new state. Metadata-only commits are conflicts
+    * too: a dropColumn changes neither lastBatchId nor the file set, but
+    * committing a manifest computed pre-drop would resurrect the dropped
+    * name. A head that differs only in its tombstones (a [[vacuum]] trim)
+    * is no conflict: the commit rebases onto it.
     *
     * `writtenThisCommit` covers files created AND superseded inside one
     * commit — inline compaction can consume the batch's own fresh delta
     * files, which no manifest ever referenced; without this they'd be
-    * invisible to the tombstone log and leak.
+    * invisible to the tombstone list and leak.
     */
   private[store] def commitAndGc(prev: Manifest, next0: Manifest,
-      writtenThisCommit: Set[String] = Set.empty,
-      writeVersioned: Boolean = true): Unit = {
+      writtenThisCommit: Set[String] = Set.empty): Unit = {
     // Stats enrichment for files this commit introduced (footer reads,
-    // driver-side, O(new files)) runs OUTSIDE the lock — it is real I/O
-    // proportional to the batch, and the lock-hold contract is
-    // O(manifest), never O(batch); callers carry prior stats forward and
-    // the renderer drops entries for files leaving the live set.
+    // driver-side, O(new files)) runs once, before any publish attempt;
+    // callers carry prior stats forward and the renderer drops entries
+    // for files leaving the live set.
     val next1 =
       if (statsCol.isEmpty) next0
       else {
@@ -1418,55 +1362,44 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
         if (fresh.isEmpty) next0
         else next0.copy(fileStats = next0.fileStats ++ footerStats(fresh))
       }
-    // Optimistic-concurrency CAS: the mutation was computed from `prev`;
-    // if another process committed meanwhile (an out-of-band Maintain
-    // compact/rebucket racing the streaming writer), blindly renaming over
-    // its manifest would silently revert a committed batch. The check runs
-    // UNDER the commit lock, so check-to-rename is atomic — a losing
-    // operation always throws and is safe to re-run against the new state.
-    // Metadata-only commits are conflicts too: a dropColumn changes
-    // neither lastBatchId nor the file set, but committing a manifest
-    // computed pre-drop would resurrect the dropped name (un-tombstoning
-    // the very hazard the tombstone list prevents) — so schema, dropped
-    // columns, and bucket count all participate in the comparison.
-    val deletable: Seq[String] = withCommitLock {
-      val disk = readManifest()
-      if (disk.lastBatchId != prev.lastBatchId ||
-          disk.dataFiles.toSet != prev.dataFiles.toSet ||
-          disk.tableSchema != prev.tableSchema ||
-          disk.droppedColumns != prev.droppedColumns ||
-          disk.bucketCount != prev.bucketCount)
+    val newLive = next1.dataFiles.toSet
+    val superseded = (prev.dataFiles.toSet ++ writtenThisCommit) -- newLive
+    var deletable = Seq.empty[String]
+    var expired = Seq.empty[Path]
+    publish(prev) { head =>
+      if (head.lastBatchId != prev.lastBatchId ||
+          head.dataFiles.toSet != prev.dataFiles.toSet ||
+          head.tableSchema != prev.tableSchema ||
+          head.droppedColumns != prev.droppedColumns ||
+          head.bucketCount != prev.bucketCount)
         throw new java.util.ConcurrentModificationException(
           s"manifest advanced during this operation (was batch ${prev.lastBatchId}, " +
-            s"now ${disk.lastBatchId}) — re-run against the current state")
-      val newLive = next1.dataFiles.toSet
-      val tombstones =
-        (prev.removed ++
-          ((prev.dataFiles.toSet ++ writtenThisCommit) -- newLive)).distinct
-      if (!autoVacuum) {
-        commitManifest(next1.copy(removed = tombstones), writeVersioned)
-        Nil
-      } else {
-        val versions = (manifestVersions() :+ next1.lastBatchId).distinct.sorted
-        val keep = versions.takeRight(retainManifests).toSet
-        val retainedLives: Set[String] = keep
-          .filter(v => v != next1.lastBatchId)
-          .flatMap { v =>
-            parseManifestIfExists(Paths.get(root, s"manifest-v$v.json"))
-              .map(_.dataFiles).getOrElse(Nil)
-          }
-        val del = tombstones
-          .filterNot(f => newLive.contains(f) || retainedLives.contains(f))
-        commitManifest(next1.copy(removed = tombstones.diff(del)), writeVersioned)
-        versions.filterNot(keep)
-          .foreach(v => Files.deleteIfExists(Paths.get(root, s"manifest-v$v.json")))
-        del
-      }
+            s"now ${head.lastBatchId}) — re-run against the current state")
+      val (retainedLives, exp) = retention(head, next1.lastBatchId)
+      val tombstones = (head.removed ++ superseded).distinct
+      deletable = tombstones.filterNot(f => newLive.contains(f) || retainedLives.contains(f))
+      expired = exp
+      next1.copy(removed = tombstones.diff(deletable))
     }
-    // Tombstone deletions run AFTER lock release: the files are already
-    // invisible from every retained manifest, so no reader or writer can
-    // resurrect them, and the lock hold stays free of O(deletable) I/O.
+    // Both deletions run after the publish: the files are already
+    // invisible from every retained entry, so no reader or writer can
+    // resurrect them. Entries go oldest first (see [[readManifest]]).
+    expired.foreach(Files.deleteIfExists)
     deletable.foreach(deleteDataFile)
+  }
+
+  /** Retention as of a commit at batch `nextBatch` on top of `head`:
+    * every entry of the last [[retainManifests]] batch ids stays. Returns
+    * the data files the newest retained entry of each OTHER batch id
+    * references (time travel still reads them) and the expired entries,
+    * oldest first.
+    */
+  private def retention(head: Manifest, nextBatch: Long): (Set[String], Seq[Path]) = {
+    val log = history(head)
+    val keep = (log.map(_.lastBatchId) :+ nextBatch).distinct.takeRight(retainManifests).toSet
+    val lives = log.filter(e => keep(e.lastBatchId) && e.lastBatchId != nextBatch)
+      .groupBy(_.lastBatchId).values.flatMap(_.last.dataFiles).toSet
+    (lives, log.filterNot(e => keep(e.lastBatchId)).map(e => entryPath(e.commit)))
   }
 
   /** Delete a superseded data file with its `.crc` sidecar, then its
@@ -1505,38 +1438,35 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
     }
 
   /** Deep clean (NOT on the per-commit path — [[commitAndGc]] handles the
-    * steady state incrementally from the tombstone log): full data/ walk
-    * deleting files no retained manifest references — including crash
-    * orphans no log entry covers — pruning empty dirs, expiring manifest
-    * versions beyond retention, deleting stranded manifest.tmp.* /
-    * manifest.vtmp.* and uncommitted manifest-v plants, and dropping
-    * tombstone-log entries whose files are gone. The live set is the
-    * UNION of the files referenced by the last [[retainManifests]]
-    * versioned manifests plus the current one — so time travel stays
-    * valid over the retention window (Iceberg expire_snapshots
-    * semantics). Lineage/signal files are append-only and never
-    * superseded, so only `data/` is swept. Safe post-commit: anything
-    * removed is invisible from every retained manifest.
+    * steady state incrementally from the tombstone list): full data/ walk
+    * deleting files no retained log entry references — including crash
+    * orphans no tombstone covers — pruning empty dirs, expiring log
+    * entries beyond retention, deleting temp entries stranded by a writer
+    * that died before publishing, and dropping tombstones whose files are
+    * gone. The live set is the UNION of the files referenced by the
+    * newest entry of each of the last [[retainManifests]] batch ids — so
+    * time travel stays valid over the retention window (Iceberg
+    * expire_snapshots semantics). Lineage/signal files are append-only
+    * and never superseded, so only `data/` is swept. Safe post-commit:
+    * anything removed is invisible from every retained entry.
     */
   /** `graceMs` shields files YOUNGER than the window from deletion: an
     * out-of-band deep clean racing an in-flight merge would otherwise
     * delete the not-yet-committed delta directory (no manifest references
-    * it yet) and the batch would commit empty or broken. 0 (default) is
-    * correct for the single-process usage the specs exercise; a separate
-    * maintenance process (Maintain CLI) passes a window comfortably above
-    * the longest micro-batch.
+    * it yet) or its staged temp entry, and the batch would fail or commit
+    * broken. 0 (default) is correct for the single-process usage the
+    * specs exercise; a separate maintenance process (Maintain CLI) passes
+    * a window comfortably above the longest micro-batch.
     */
   def vacuum(graceMs: Long = 0L): Unit = {
     val cutoff = System.currentTimeMillis() - graceMs
+    def aged(p: Path): Boolean =
+      graceMs <= 0L || Files.getLastModifiedTime(p).toMillis < cutoff
     val m = readManifest()
-    val versions = manifestVersions()
-    val expired = versions.dropRight(retainManifests)
-    expired.foreach(v => Files.deleteIfExists(Paths.get(root, s"manifest-v$v.json")))
-    val retained = versions.takeRight(retainManifests).flatMap(v =>
-      parseManifestIfExists(Paths.get(root, s"manifest-v$v.json")))
-    val live: Set[Path] =
-      (m.dataFiles ++ retained.flatMap(_.dataFiles))
-        .map(f => Paths.get(root, f).toAbsolutePath.normalize).toSet
+    val (retainedLives, expired) = retention(m, m.lastBatchId)
+    expired.foreach(Files.deleteIfExists)
+    val live: Set[Path] = (m.dataFiles ++ retainedLives)
+      .map(f => Paths.get(root, f).toAbsolutePath.normalize).toSet
     val dataRoot = Paths.get(root, "data")
     if (Files.exists(dataRoot)) {
       val walk = Files.walk(dataRoot)
@@ -1547,9 +1477,7 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
             // tombstoned file first — a vanished file is a finished job,
             // not a reason to abort the deep clean mid-walk
             try {
-              if (!live.contains(p.toAbsolutePath.normalize) &&
-                (graceMs <= 0L ||
-                  Files.getLastModifiedTime(p).toMillis < cutoff))
+              if (!live.contains(p.toAbsolutePath.normalize) && aged(p))
                 Files.deleteIfExists(p)
             } catch { case _: java.nio.file.NoSuchFileException => () }
           } else if (Files.isDirectory(p) && p != dataRoot) {
@@ -1562,9 +1490,7 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
             try {
               val ls = Files.list(p)
               val empty = try !ls.iterator().hasNext finally ls.close()
-              if (empty && (graceMs <= 0L ||
-                  Files.getLastModifiedTime(p).toMillis < cutoff))
-                Files.deleteIfExists(p)
+              if (empty && aged(p)) Files.deleteIfExists(p)
             } catch {
               case _: java.nio.file.DirectoryNotEmptyException => ()
               case _: java.nio.file.NoSuchFileException => () // racer pruned it
@@ -1573,35 +1499,23 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
         }
       } finally walk.close()
     }
-    // Tail mutations run UNDER the commit lock against a FRESH manifest
-    // read — the walk above can take minutes on a big table, and a merge
-    // landing mid-vacuum must neither have its versioned manifest swept
-    // as an "uncommitted plant" (its id exceeds the STALE lastBatchId
-    // read at entry) nor be reverted by re-committing the entry-time
-    // manifest snapshot (which bypassed commitAndGc's CAS and silently
-    // undid the batch — the round-3 data-loss finding). Stranded tmp /
-    // vtmp files additionally respect the grace window: a well-behaved
-    // writer's in-flight temp is always younger than it.
-    withCommitLock {
-      val cur = readManifest()
-      val rootLs = Files.list(Paths.get(root))
-      try rootLs.iterator().asScala
-        .filter { p =>
-          val n = p.getFileName.toString
-          val stranded =
-            n.startsWith("manifest.tmp.") || n.startsWith("manifest.vtmp.") ||
-              (n.startsWith("manifest-v") && n.endsWith(".json") &&
-                n.stripPrefix("manifest-v").stripSuffix(".json").toLong > cur.lastBatchId)
-          stranded && (graceMs <= 0L ||
-            Files.getLastModifiedTime(p).toMillis < cutoff)
-        }
-        .toSeq.foreach(Files.delete)
-      finally rootLs.close()
-      // Tombstone-log trim of the CURRENT manifest only — never the
-      // entry-time snapshot: we only drop entries whose files are gone.
-      val keptRemoved = cur.removed.filter(f => Files.exists(Paths.get(root, f)))
-      if (keptRemoved != cur.removed) commitManifest(cur.copy(removed = keptRemoved))
-    }
+    // a live writer's temp entry is younger than the grace window; an
+    // older one was stranded by a writer that died before publishing
+    val ls = Files.list(logDir)
+    try ls.iterator().asScala.filter(_.getFileName.toString.endsWith(".tmp")).toSeq
+      .foreach { p =>
+        try { if (aged(p)) Files.deleteIfExists(p) }
+        catch { case _: NoSuchFileException => () } // published meanwhile
+      }
+    finally ls.close()
+    // The tombstone trim is a commit like any other, applied to whatever
+    // head is current when it publishes: the walk above can take minutes
+    // on a big table, and a trim of the entry-time manifest would revert
+    // a batch committed meanwhile.
+    def gone(f: String): Boolean = !Files.exists(Paths.get(root, f))
+    val cur = readManifest()
+    if (cur.removed.exists(gone))
+      publish(cur)(head => head.copy(removed = head.removed.filterNot(gone)))
   }
 
   /** Live file count by kind — compaction/vacuum observability for tests. */

@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import graft.replay.ChangeStream
 import graft.store.IcebergLikeTable
 
@@ -103,10 +104,12 @@ class ChangeStreamSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("type change"))
     // nothing of the batch is still in flight once the call has returned:
-    // the sibling's merge has committed, and no commit lock is held
+    // the sibling's merge has committed, and left no temp entry behind
     assert(good.readManifest().lastBatchId === 1L)
     assert(content(good) === Map("1" -> 1, "3" -> 3))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(good.root, "commit.lock")))
+    val log = java.nio.file.Files.list(java.nio.file.Paths.get(good.root, "log"))
+    try assert(!log.iterator().asScala.exists(_.getFileName.toString.endsWith(".tmp")))
+    finally log.close()
     assert(bad.readManifest().lastBatchId === 0L)
   }
 }

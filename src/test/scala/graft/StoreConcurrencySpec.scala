@@ -3,11 +3,15 @@ package graft
 import java.util.ConcurrentModificationException
 import graft.store.{IcebergLikeTable, StoreTestAccess}
 
-/** Multi-writer safety of the store's commit protocol (round-4 hardening):
-  * the exclusive commit lock makes the optimistic-concurrency check a
-  * genuine CAS (no check-to-rename window), metadata-only commits
-  * (dropColumn) conflict too, and vacuum's tail mutations can no longer
-  * revert a batch committed mid-walk.
+/** Multi-writer safety of the store's commit protocol: each commit
+  * publishes the next numbered log entry with an exclusive create, so of
+  * two commits computed from one head exactly one wins its number. The
+  * loser throws on a real conflict — metadata-only commits (dropColumn)
+  * included — and rebases past a tombstone trim. A writer that dies after
+  * publishing but before refreshing the head hint loses nothing; one that
+  * dies before publishing leaves a temp entry no reader sees. vacuum's
+  * trim publishes like any commit, so it cannot revert a batch committed
+  * mid-walk.
   */
 class StoreConcurrencySpec extends SparkSpec {
   import spark.implicits._
@@ -60,7 +64,7 @@ class StoreConcurrencySpec extends SparkSpec {
     val expect = (0 until 8).map(i => s"k$i" -> ((nBatches - 1) * 100 + i)).toMap
     assert(writerT.read().as[(String, Int)].collect().toMap === expect)
     assert(writerT.readManifest().lastBatchId === (nBatches - 1).toLong)
-    // and the lock is released: a subsequent commit succeeds immediately
+    // and a later commit succeeds immediately
     assert(writerT.merge(Seq(("k0", 9999)).toDF("conv_id", "n"), "conv_id",
       nBatches.toLong))
     writerT.vacuum()
@@ -110,67 +114,95 @@ class StoreConcurrencySpec extends SparkSpec {
     assert(!t.schema().fieldNames.contains("n"))
   }
 
-  test("vacuum plant sweep honors the grace window (in-flight versioned manifests survive)") {
-    val root = tmpDir("plantgrace") + "/t"
+  private def entry(root: String, commit: Long) =
+    java.nio.file.Paths.get(root, "log", s"$commit.manifest")
+
+  test("two commits computed from one head: one publishes the next number, the conflicting loser throws CME") {
+    val root = tmpDir("race") + "/t"
     val t = new IcebergLikeTable(root, numBuckets = 2, emptySchema = schema)
     t.merge(Seq(("a", 1)).toDF("conv_id", "n"), "conv_id", 0L)
-    // a young "future" versioned manifest — mid-commit from another
-    // writer's perspective (the old sweep deleted it against a STALE
-    // lastBatchId; grace now shields anything younger than the window)
-    val plant = java.nio.file.Paths.get(root, "manifest-v99.json")
-    java.nio.file.Files.writeString(plant, "lastBatchId=99\n")
-    t.vacuum(graceMs = 3600L * 1000)
-    assert(java.nio.file.Files.exists(plant), "young plant swept despite grace")
-    t.vacuum()
-    assert(!java.nio.file.Files.exists(plant), "grace-less deep clean keeps plants")
-  }
-
-  test("a stale (orphaned) commit lock is broken, not waited on forever") {
-    val root = tmpDir("stalelock") + "/t"
-    val t = new IcebergLikeTable(root, numBuckets = 2, emptySchema = schema)
-    val lock = java.nio.file.Paths.get(root, "commit.lock")
-    java.nio.file.Files.createFile(lock)
-    // age it past LockStaleMs (60s) — a crashed holder's leftover
-    java.nio.file.Files.setLastModifiedTime(lock,
-      java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - 120000L))
-    assert(t.merge(Seq(("a", 1)).toDF("conv_id", "n"), "conv_id", 0L),
-      "commit should break the stale lock and proceed")
-    assert(!java.nio.file.Files.exists(lock), "lock released after commit")
-  }
-
-  test("release deletes only its OWN lock: a successor's lock survives a slow holder's exit") {
-    val root = tmpDir("ownlock") + "/t"
-    val t = new IcebergLikeTable(root, numBuckets = 2, emptySchema = schema)
-    val lock = java.nio.file.Paths.get(root, "commit.lock")
-    // simulate: while this holder runs, a breaker declares it stale and
-    // replaces the lock with its own token
-    StoreTestAccess.underCommitLock(t) {
-      java.nio.file.Files.write(lock, "successor-token".getBytes)
-    }
-    assert(java.nio.file.Files.exists(lock),
-      "the outgoing holder must not delete a lock it no longer owns")
-    assert(new String(java.nio.file.Files.readAllBytes(lock)) == "successor-token")
-    java.nio.file.Files.delete(lock)
-  }
-
-  test("manifest swap is fenced: a holder whose lock was broken mid-commit aborts") {
-    val root = tmpDir("fence") + "/t"
-    val t = new IcebergLikeTable(root, numBuckets = 2, emptySchema = schema)
-    t.merge(Seq(("a", 1)).toDF("conv_id", "n"), "conv_id", 0L)
-    val lock = java.nio.file.Paths.get(root, "commit.lock")
-    val m = t.readManifest()
-    intercept[java.util.ConcurrentModificationException] {
-      StoreTestAccess.underCommitLock(t) {
-        // breaker stole the lock between this holder's CAS check and its
-        // manifest swap — the swap must abort, not commit a stale view
-        java.nio.file.Files.write(lock, "thief".getBytes)
-        StoreTestAccess.swapManifest(t)(m.copy(lastBatchId = 99L))
-      }
-    }
-    assert(t.readManifest().lastBatchId == 0L, "no split-brain commit landed")
-    java.nio.file.Files.deleteIfExists(lock)
-    // the loser is safe to re-run: a fresh attempt against current state wins
+    val head = t.readManifest()
+    val c = head.commit + 1
+    // the winner: a merge from that head publishes number c
     assert(t.merge(Seq(("b", 2)).toDF("conv_id", "n"), "conv_id", 1L))
+    assert(t.readManifest().commit === c)
+    // the loser computed batch 1 from the same head: its create of c
+    // fails, and the head it re-reads holds another batch
+    intercept[ConcurrentModificationException] {
+      StoreTestAccess.commit(t)(head, head.copy(lastBatchId = 1L))
+    }
+    assert(t.readManifest().commit === c)
+    assert(java.nio.file.Files.exists(entry(root, c)))
+    assert(!java.nio.file.Files.exists(entry(root, c + 1)), "the loser published nothing")
+    assert(t.read().as[(String, Int)].collect().toMap === Map("a" -> 1, "b" -> 2))
+  }
+
+  test("a loser whose rival only trimmed tombstones rebases and publishes the number after") {
+    val root = tmpDir("rebase") + "/t"
+    val t = new IcebergLikeTable(root, numBuckets = 1, maxDeltasPerBucket = 2,
+      emptySchema = schema)
+    t.merge(Seq(("a", 1)).toDF("conv_id", "n"), "conv_id", 0L)
+    // compacts inline: batch 0's delta leaves the live set but stays a
+    // tombstone, since batch 0's retained entry still references it
+    t.merge(Seq(("a", 2)).toDF("conv_id", "n"), "conv_id", 1L)
+    val head = t.readManifest()
+    assert(head.removed.nonEmpty)
+    // the tombstoned files vanish, so the rival vacuum publishes a trim
+    head.removed.foreach(f => java.nio.file.Files.delete(java.nio.file.Paths.get(root, f)))
+    t.vacuum()
+    assert(t.readManifest().commit === head.commit + 1)
+    assert(t.readManifest().removed.isEmpty)
+    // a commit computed from the pre-trim head: same batch, files and
+    // schema, so no conflict — it rebases onto the trim
+    StoreTestAccess.commit(t)(head, head.copy(lastBatchId = 2L))
+    val now = t.readManifest()
+    assert(now.commit === head.commit + 2)
+    assert(now.lastBatchId === 2L)
+    assert(now.removed.isEmpty, "the rebased commit must keep the rival's trim")
+    assert(t.read().as[(String, Int)].collect().toMap === Map("a" -> 2))
+  }
+
+  test("a writer that dies after publishing, before the hint refresh, loses nothing") {
+    val root = tmpDir("nohint") + "/t"
+    val t = new IcebergLikeTable(root, numBuckets = 2, emptySchema = schema)
+    val hint = java.nio.file.Paths.get(root, "manifest.json")
+    t.merge(Seq(("a", 1)).toDF("conv_id", "n"), "conv_id", 0L)
+    val first = java.nio.file.Files.readAllBytes(hint)
+    t.merge(Seq(("b", 2)).toDF("conv_id", "n"), "conv_id", 1L)
+    // the hint as a writer leaves it when it dies right after the link
+    java.nio.file.Files.write(hint, first)
+    assert(t.readManifest().lastBatchId === 1L)
+    assert(t.readAsOf(1L).as[(String, Int)].collect().toMap === Map("a" -> 1, "b" -> 2))
+    assert(t.readChangesBetween(0L, 1L).as[(String, Int)].collect().toMap === Map("b" -> 2))
+    assert(!t.merge(Seq(("b", 3)).toDF("conv_id", "n"), "conv_id", 1L),
+      "the published batch is a duplicate delivery")
+    assert(t.merge(Seq(("c", 3)).toDF("conv_id", "n"), "conv_id", 2L))
+    (3 until 6).foreach(b =>
+      t.merge(Seq(("c", b)).toDF("conv_id", "n"), "conv_id", b.toLong))
+    // a hint so stale that GC took its own entry: the log listing answers
+    assert(!java.nio.file.Files.exists(entry(root, 0L)))
+    java.nio.file.Files.write(hint, first)
+    assert(t.readManifest().lastBatchId === 5L)
+    assert(IcebergLikeTable.open(root).read().as[(String, Int)].collect().toMap ===
+      Map("a" -> 1, "b" -> 2, "c" -> 5))
+  }
+
+  test("a temp entry stranded before publishing is invisible, survives the vacuum grace window, then is swept") {
+    val root = tmpDir("strand") + "/t"
+    val t = new IcebergLikeTable(root, numBuckets = 2, emptySchema = schema)
+    t.merge(Seq(("a", 1)).toDF("conv_id", "n"), "conv_id", 0L)
+    val head = t.readManifest()
+    val tmp = StoreTestAccess.strandTemp(t)(
+      head.copy(lastBatchId = 99L, commit = head.commit + 1))
+    assert(t.readManifest().commit === head.commit)
+    assert(t.manifestVersions() === Seq(0L))
+    intercept[IllegalArgumentException] { t.readAsOf(99L) }
+    t.vacuum(graceMs = 3600L * 1000)
+    assert(java.nio.file.Files.exists(tmp), "young temp swept despite grace")
+    t.vacuum()
+    assert(!java.nio.file.Files.exists(tmp), "grace-less deep clean keeps temps")
+    // the number the temp was staged for is still free
+    assert(t.merge(Seq(("b", 2)).toDF("conv_id", "n"), "conv_id", 1L))
+    assert(t.readManifest().commit === head.commit + 1)
   }
 }

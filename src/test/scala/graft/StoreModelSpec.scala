@@ -103,6 +103,10 @@ class StoreModelSpec extends SparkSpec {
         assert(got == model.get(p), s"seed=$seed step=$step get($p) vs model")
         assert(got == lookup(p), s"seed=$seed step=$step get($p) vs lookup")
       }
+      // the head is history's newest entry, and time travel to it is the model
+      assert(t.manifestVersions().last == t.readManifest().lastBatchId,
+        s"seed=$seed step=$step head = history")
+      assert(asOf(version) == model, s"seed=$seed step=$step asOf(head)")
       t.manifestVersions().foreach { v =>
         assert(asOf(v) == history(v), s"seed=$seed step=$step asOf($v)")
       }

@@ -45,23 +45,6 @@ class TableMaintenanceSpec extends SparkSpec {
     assert(got.forall(_.turn_count === 10L))
   }
 
-  test("bytes-based compaction trigger: chains bounded by size, not just count") {
-    val t = new IcebergLikeTable(tmpDir("bytescompact") + "/t", numBuckets = 2,
-      maxDeltasPerBucket = 100, // count alone would never trigger
-      maxDeltaBytesPerBucket = 1L, // any delta bytes trigger
-      emptySchema = org.apache.spark.sql.types.StructType.fromDDL(
-        "conv_id string, n int"))
-    (0 until 3).foreach { b =>
-      t.merge(Seq((s"k$b", b), ("shared", b)).toDF("conv_id", "n"),
-        "conv_id", b.toLong)
-    }
-    val (bases, deltas) = t.fileStats()
-    assert(deltas == 0, s"bytes trigger must compact every chain (deltas=$deltas)")
-    assert(bases > 0)
-    assert(t.read().as[(String, Int)].collect().toMap ==
-      Map("k0" -> 0, "k1" -> 1, "k2" -> 2, "shared" -> 2))
-  }
-
   test("repeated deferred compaction at one version never overwrites its own base files") {
     val root = tmpDir("compactcollide") + "/t"
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
@@ -177,21 +160,20 @@ class TableMaintenanceSpec extends SparkSpec {
       "incremental GC should have deleted the superseded delta chain")
   }
 
-  test("a planted uncommitted versioned manifest is refused by readAsOf, hidden from history, cleared by vacuum") {
+  test("a stray versioned manifest file is neither history nor readable") {
     val dir = tmpDir("plant") + "/t"
     val table = new IcebergLikeTable(dir, numBuckets = 4, retainManifests = 2)
     (0 until 3).foreach(b => mergeBatch(table, b.toLong, Seq(snap("a", b))))
     assert(table.manifestVersions() === Seq(1L, 2L))
-    // a version file for a batch that never committed (external interference
-    // or a pre-fix crash): must not surface as history or readable state
+    // history is the log alone: a manifest-shaped file outside it, for a
+    // batch that never committed, must not surface as history or state
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "manifest-v99.json"),
-      "lastBatchId=99\nbucket:0=data/ghost.parquet\n")
+      "lastBatchId=99\ncommit=99\nbucket:0=data/ghost.parquet\n")
     assert(table.manifestVersions() === Seq(1L, 2L))
     intercept[IllegalArgumentException] { table.readAsOf(99L) }
+    assert(table.readManifest().lastBatchId === 2L)
     table.vacuum()
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dir, "manifest-v99.json")))
     assert(table.readAsOf(2L).count() === 1L, "committed history survives the deep clean")
   }
 
