@@ -7,10 +7,14 @@ import graft.store.IcebergLikeTable
 /** D2 — the dump pipeline (reference: dumps/SqsDumpRunner.scala:54-74:
   * key scan → grouped publish → Done; abortable via kill switch).
   *
-  * Spark restatement: a column-pruned scan of the snapshot table's key set,
-  * published per partition (the SQS batcher analog is the caller-supplied
-  * `publish`), lifecycle tracked in [[DumpManager]], cancellation mapped to
-  * `cancelJobGroup` (SURVEY.md §3.3).
+  * Spark restatement: the snapshot table's key set
+  * ([[graft.store.IcebergLikeTable.liveKeys]] through [[Replay.dump]] /
+  * [[Replay.incrementalDump]]) published per partition — one Spark job,
+  * one task and so one `publish` call per bucket, no shuffle (the SQS
+  * batcher analog is the caller-supplied `publish`) — lifecycle tracked in
+  * [[DumpManager]], cancellation mapped to `cancelJobGroup` (SURVEY.md
+  * §3.3): the job runs in the dump's job group, so an abort kills its
+  * bucket tasks.
   */
 object DumpService {
 

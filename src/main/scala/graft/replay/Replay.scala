@@ -19,8 +19,8 @@ import graft.store.IcebergLikeTable
   *     offset table; validity checking is the checkpoint protocol's.
   *  2. [[toTimestamp]] — batch reconstruction of the snapshot as of event
   *     time T (znap's dump is offset-bounded; ours is event-time-bounded).
-  *  3. [[dump]] — full key-set scan of the snapshot table with projection
-  *     pushdown (znap D1, SnapshotService.scala:90-99).
+  *  3. [[dump]] — full key-set scan of the snapshot table, one task per
+  *     bucket (znap D1, SnapshotService.scala:90-99).
   */
 /** Requested replay point lies outside the available/committed window —
   * the fail-fast the reference throws when a stored offset falls outside
@@ -122,11 +122,15 @@ object Replay {
   def toTimestamp(turns: Dataset[Turn], t: Timestamp): DataFrame =
     SnapshotFold.batchSnapshots(turns.filter(col("ts") <= lit(t)).toDF())
 
-  /** Dump: the snapshot's key set (column-pruned scan — only conv_id is
-    * read from parquet), partition-parallel like znap's 4-segment scan.
+  /** Dump: the snapshot's key set — the keys of the table's current
+    * state, in its key column — partition-parallel like znap's 4-segment
+    * scan (SnapshotService.scala:90-99), one task per bucket. Read by
+    * [[IcebergLikeTable.liveKeys]]: one Spark job that reads only the key
+    * and `__seq` (+ `__del` while delete markers may be live), with no
+    * Exchange on any table state — each task resolves its bucket's delta
+    * chain against its base itself.
     */
-  def dump(table: IcebergLikeTable): DataFrame =
-    table.read().select(col("conv_id"))
+  def dump(table: IcebergLikeTable): DataFrame = table.liveKeys()
 
   /** Incremental dump: keys whose snapshot changed after committed batch
     * `sinceBatch` — the scale-friendly form of [[dump]] (a 10^12-turn
@@ -135,13 +139,12 @@ object Replay {
     * exactly like a replay-from-offset (S4, [[validateReplayBatch]]): an
     * unknown since-batch fails fast, never silently dumping everything
     * or nothing. That check reads the manifest only, so the dump is one
-    * column-pruned scan like [[dump]]: the change read filters
-    * `__seq > sinceBatch` before resolving and reads only the key and
-    * `__seq` — one job on a compacted table, a key-only group-by on a
-    * delta chain ([[IcebergLikeTable.readChangesSince]]).
+    * job like [[dump]]: [[IcebergLikeTable.liveKeys]] over the files
+    * written after `sinceBatch`, the key set of
+    * [[IcebergLikeTable.readChangesSince]].
     */
   def incrementalDump(table: IcebergLikeTable, sinceBatch: Long): DataFrame = {
     validateReplayBatch(table, sinceBatch)
-    table.readChangesSince(sinceBatch).select(col("conv_id"))
+    table.liveKeys(Some(sinceBatch))
   }
 }

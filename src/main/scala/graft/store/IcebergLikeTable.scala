@@ -93,18 +93,26 @@ object IcebergLikeTable {
     * rewrites, a replica, an ad-hoc reader — cannot accidentally resolve
     * by the wrong key or strip per-file stats by constructing with
     * mismatched defaults. Writer-side knobs that are NOT table contract
-    * (compaction policy, bloom sizing) stay parameters. Throws on a
-    * missing/empty manifest: opening a table that was never committed is
-    * a deployment error, not a default-config table.
+    * (compaction policy, bloom sizing) stay parameters. A table is
+    * committed once `log/` holds an entry: a commit is published by its
+    * entry, and the head hint (`manifest.json`) only follows it, so a
+    * writer that died between the two still left a table to open. Throws
+    * when no entry exists: opening a table that was never committed is a
+    * deployment error, not a default-config table.
     */
   def open(root: String, inlineCompaction: Boolean = true,
       keyBloomNdv: Option[Long] = None,
       maxDeltasPerBucket: Int = 8, retainManifests: Int = 2)(
       implicit spark: SparkSession): IcebergLikeTable = {
     // existence check BEFORE any table construction: the constructor
-    // creates root/data, so a probe instance on a typo'd path would
-    // side-effect the filesystem and mask the typo on retry
-    require(Files.exists(Paths.get(root, "manifest.json")),
+    // creates root/data and root/log, so a probe instance on a typo'd
+    // path would side-effect the filesystem and mask the typo on retry
+    val log = Paths.get(root, "log")
+    require(Files.isDirectory(log) && {
+        val ls = Files.list(log)
+        try ls.iterator().asScala.exists(p => EntryName.matches(p.getFileName.toString))
+        finally ls.close()
+      },
       s"IcebergLikeTable.open('$root'): no committed manifest — construct " +
         "the table explicitly to create it")
     val probe = new IcebergLikeTable(root, numBuckets = 8)
@@ -390,7 +398,11 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
     */
   @tailrec private def publish(head: Manifest)(next: Manifest => Manifest): Unit = {
     val entry = stamped(head, next(head))
-    val tmp = stage(entry)
+    // rendered once: the same bytes become the entry and, after a win,
+    // the hint (a copy, not a second link: a hint rewritten in place must
+    // not rewrite the entry)
+    val text = renderManifest(entry).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val tmp = stage(entry.commit, text)
     // A base whose own entry is gone was collected, and so may the number
     // after it have been: linking that number would publish an entry
     // behind the head. An empty base is current only while the log is.
@@ -400,19 +412,23 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
       (try { Files.createLink(entryPath(entry.commit), tmp); true }
        catch { case _: FileAlreadyExistsException => false })
     Files.delete(tmp)
-    if (won) Files.move(stage(entry), manifestPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    if (won) Files.move(stage(entry.commit, text), manifestPath,
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     else publish(readManifest())(next)
   }
 
-  /** Write `entry` to a fresh temp under `log/`. Readers never see it:
-    * they look only at `<n>.manifest` names.
+  /** Write `text`, entry `commit` rendered, to a fresh temp under `log/`.
+    * Readers never see it: they look only at `<n>.manifest` names.
     */
-  private[store] def stage(entry: Manifest): Path = {
-    val tmp = logDir.resolve(s"${entry.commit}.${java.util.UUID.randomUUID()}.tmp")
-    Files.writeString(tmp, renderManifest(entry))
+  private def stage(commit: Long, text: Array[Byte]): Path = {
+    val tmp = logDir.resolve(s"$commit.${java.util.UUID.randomUUID()}.tmp")
+    Files.write(tmp, text)
     tmp
   }
+
+  /** [[stage]] of `entry` rendered (tests strand it as a dead writer's temp). */
+  private[store] def stage(entry: Manifest): Path =
+    stage(entry.commit, renderManifest(entry).getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** `m` numbered as the entry after `base`, with the table contract
     * stamped in (see Manifest.keyColOpt doc): a writer whose key / stats
@@ -550,21 +566,10 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
     */
   private def resolveKeepSeq(df: DataFrame): DataFrame = {
     import graft.functions.GraftFunctions.latest_by
-    val dc = IcebergLikeTable.DeleteCol
-    val payload = df.columns.filter(c => c != keyCol && c != "__seq" && c != dc) :+ "__seq"
-    // The marker resolves in its own aggregate, so a reader that keeps
-    // only the key and filters on the marker (a keys-only change read
-    // with deletes live) lets Catalyst prune the payload aggregate and
-    // its columns from the scan. Both aggregates pick the same row: their
-    // structs are never null, so latest_by's keep/replace choice depends
-    // only on `__seq`, and both see the same rows in the same order.
-    val markerAgg =
-      if (!df.columns.contains(dc)) Nil
-      else Seq(latest_by(struct(col(dc)), col("__seq")).as("__d"))
+    val payload = df.columns.filter(c => c != keyCol && c != "__seq") :+ "__seq"
     df.groupBy(col(keyCol))
-      .agg(latest_by(struct(payload.map(col): _*), col("__seq")).as("__r"), markerAgg: _*)
-      .select((col(keyCol) +: payload.map(c => col(s"__r.$c").as(c))) ++
-        markerAgg.map(_ => col(s"__d.$dc").as(dc)): _*)
+      .agg(latest_by(struct(payload.map(col): _*), col("__seq")).as("__r"))
+      .select(col(keyCol) +: payload.map(c => col(s"__r.$c").as(c)): _*)
       // restore the INPUT column order (key where the schema puts it):
       // without this, read() returns key-first while deltas exist but
       // schema order once compaction empties them — a silent positional
@@ -866,14 +871,47 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
     * row per key and buckets partition the keys, so each key has at most
     * one candidate row — the fact [[read]]'s clean-base path rests on. A
     * candidate delta still resolves, since [[merge]] does not enforce one
-    * row per key. A caller selecting only the key (an incremental dump)
-    * therefore reads only the key and `__seq` (+ `__del` while markers
-    * may be live): one job on a bases-only table, a key-only group-by
-    * otherwise.
+    * row per key. The key set alone (an incremental dump) is
+    * [[liveKeys]]`(Some(sinceBatch))`, which resolves each bucket in its
+    * own task instead of through a shuffle.
     */
   def readChangesSince(sinceBatch: Long,
       includeDeletes: Boolean = false): DataFrame =
     changesFrom(readManifest(), sinceBatch, includeDeletes)
+
+  private lazy val keySetReader = new KeySetReader
+
+  /** The live key set: every key whose latest row is no delete marker —
+    * the keys of [[read]]. With `since`, the keys of
+    * [[readChangesSince]]`(since)`: those whose latest change after batch
+    * `since` is an upsert. One column, [[keyCol]].
+    *
+    * The read is bucket-aligned ([[KeySetReader]]): one Spark job, one
+    * task per bucket with a file to read, each resolving its bucket's
+    * last-writer-wins itself, and no Exchange, on any table state. It
+    * reads the key and `__seq` (+ `__del` while markers may be live). A
+    * bucket lists its deltas newest first, then its base; a since-read
+    * lists only the candidates, the files whose version exceeds `since`
+    * (exact, see [[readChangesSince]]). A bucket's base version (from its
+    * file names) splits its rows: above it, delta rows; at or below it,
+    * base rows. A base of unknown version splits at -1, so its rows
+    * resolve in the map with the deltas'.
+    */
+  def liveKeys(since: Option[Long] = None): DataFrame = {
+    val m = readManifest()
+    val key = m.tableSchema.getOrElse(emptySchema)(keyCol)
+    val read = StructType(plusSeq(StructType(Seq(key)), withDel = m.hasDeletes)
+      .fields.map(_.copy(nullable = true)))
+    val floor = since.getOrElse(Long.MinValue)
+    val buckets = (m.buckets.keySet ++ m.deltas.keySet).toSeq.sorted.flatMap { b =>
+      val base = m.buckets.getOrElse(b, Nil)
+      val files = (m.deltas.getOrElse(b, Nil).reverse ++ base).filter(fileVersion(_) > floor)
+      val version = base.map(fileVersion).maxOption.filter(_ != Long.MaxValue).getOrElse(-1L)
+      if (files.isEmpty) None else Some((files.map(f => Paths.get(root, f)), version))
+    }
+    org.apache.spark.sql.graftshim.Shim.internalDataFrame(spark,
+      keySetReader.keys(read, buckets, floor), StructType(read.take(1)))
+  }
 
   /** The change computation shared by the live and historical forms:
     * candidate files = those whose directory version exceeds `since`;
@@ -1189,7 +1227,11 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
   }
 
   /** Compaction trigger: the delta file COUNT — the read-amplification
-    * bound, since a point read opens base + all deltas.
+    * bound, since a point read opens base + all deltas. It bounds the
+    * memory of a [[liveKeys]] task as well: the task keeps one map entry
+    * per distinct key among its bucket's delta rows (fewer than
+    * `maxDeltasPerBucket` files' worth while compaction keeps up) and
+    * streams the base.
     */
   private def needsCompaction(deltaFiles: Seq[String]): Boolean =
     deltaFiles.size >= maxDeltasPerBucket

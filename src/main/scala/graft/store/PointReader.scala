@@ -13,6 +13,40 @@ import org.apache.spark.sql.sources.{EqualTo, Filter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
+/** Spark's per-file Parquet reader function
+  * (`ParquetFileFormat.buildReaderWithPartitionValues`, what a scan task
+  * runs) with `filters` pushed, built once per read schema — building one
+  * broadcasts a Hadoop configuration — and kept until the schema changes.
+  * Rows come one at a time (no columnar batches), and the reader reuses
+  * its row object.
+  */
+private[store] final class ParquetReaders(filters: Seq[Filter])(implicit spark: SparkSession) {
+  private val format = new ParquetFileFormat
+  private val built = new AtomicReference[(StructType, PartitionedFile => Iterator[InternalRow])]
+
+  def apply(schema: StructType): PartitionedFile => Iterator[InternalRow] = {
+    val b = built.get
+    if (b != null && b._1 == schema) b._2
+    else {
+      val r = format.buildReaderWithPartitionValues(spark, schema, new StructType(),
+        schema, filters, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        new Configuration(spark.sparkContext.hadoopConfiguration))
+      built.set(schema -> r)
+      r
+    }
+  }
+}
+
+private[store] object ParquetReaders {
+  /** `f` as one split covering the whole file. */
+  def wholeFile(f: Path): PartitionedFile = {
+    val len = Files.size(f)
+    PartitionedFile(InternalRow.empty,
+      SparkPath.fromPath(new org.apache.hadoop.fs.Path(f.toUri)), 0L, len,
+      Array.empty[String], 0L, len, Map.empty)
+  }
+}
+
 /** Reads the rows of ONE key from a handful of parquet files on the
   * calling thread — Spark's own Parquet reader
   * (`ParquetFileFormat.buildReaderWithPartitionValues`, the per-file
@@ -20,16 +54,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * `EqualTo` is pushed into every file read, so parquet's row-group
   * stats and key bloom filter skip the row groups that cannot hold it.
   *
-  * The reader function is built once per read schema (building one
-  * broadcasts a Hadoop configuration) and kept until the schema changes.
+  * The reader function is built once per read schema ([[ParquetReaders]]).
   * Its pushed filters are bound when it is built, so the key travels in a
   * thread-local that the reader's filter list resolves per file: the same
   * reader serves concurrent reads of different keys.
   */
 private[store] final class PointReader(keyCol: String)(implicit spark: SparkSession) {
-  private val format = new ParquetFileFormat
-  private val built = new AtomicReference[(StructType, PartitionedFile => Iterator[InternalRow])]
-
   private val key = new ThreadLocal[Seq[Filter]] {
     override def initialValue(): Seq[Filter] = Nil
   }
@@ -41,17 +71,7 @@ private[store] final class PointReader(keyCol: String)(implicit spark: SparkSess
     def iterator: Iterator[Filter] = key.get.iterator
   }
 
-  private def reader(schema: StructType): PartitionedFile => Iterator[InternalRow] = {
-    val b = built.get
-    if (b != null && b._1 == schema) b._2
-    else {
-      val r = format.buildReaderWithPartitionValues(spark, schema, new StructType(),
-        schema, keyFilter, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-        new Configuration(spark.sparkContext.hadoopConfiguration))
-      built.set(schema -> r)
-      r
-    }
-  }
+  private val reader = new ParquetReaders(keyFilter)
 
   /** Copies of the rows of `files` whose [[keyCol]] equals `k`, read
     * under `schema` (every field nullable: a file written before a column
@@ -71,10 +91,7 @@ private[store] final class PointReader(keyCol: String)(implicit spark: SparkSess
   private[store] def scan[A](schema: StructType, f: Path, k: String)(
       use: Iterator[InternalRow] => A): A = {
     val read = reader(schema)
-    val len = Files.size(f)
-    val file = PartitionedFile(InternalRow.empty,
-      SparkPath.fromPath(new org.apache.hadoop.fs.Path(f.toUri)), 0L, len,
-      Array.empty[String], 0L, len, Map.empty)
+    val file = ParquetReaders.wholeFile(f)
     key.set(Seq(EqualTo(keyCol, k)))
     val it = try read(file) finally key.remove()
     try use(it) finally it match {

@@ -30,6 +30,17 @@ object Shim {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** DataFrame over an RDD of rows already in Catalyst's internal form
+    * (`internalCreateDataFrame` is private[sql]) — lets the store hand a
+    * hand-built scan to callers as an ordinary DataFrame, with no per-row
+    * conversion from external rows.
+    */
+  def internalDataFrame(spark: org.apache.spark.sql.SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
+
   /** Register a native-Expression SQL function on an EXISTING session
     * (the FunctionRegistry is private[sql]; new sessions can instead use
     * graft.functions.GraftExtensions via spark.sql.extensions).

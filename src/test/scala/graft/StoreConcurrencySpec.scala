@@ -1,6 +1,7 @@
 package graft
 
 import java.util.ConcurrentModificationException
+import scala.jdk.CollectionConverters._
 import graft.store.{IcebergLikeTable, StoreTestAccess}
 
 /** Multi-writer safety of the store's commit protocol: each commit
@@ -204,5 +205,48 @@ class StoreConcurrencySpec extends SparkSpec {
     // the number the temp was staged for is still free
     assert(t.merge(Seq(("b", 2)).toDF("conv_id", "n"), "conv_id", 1L))
     assert(t.readManifest().commit === head.commit + 1)
+  }
+
+  test("a table whose first commit lost its hint opens from the log; a root with neither throws") {
+    val root = tmpDir("openlog") + "/t"
+    val t = new IcebergLikeTable(root, numBuckets = 2, emptySchema = schema)
+    t.merge(Seq(("a", 1), ("b", 2)).toDF("conv_id", "n"), "conv_id", 0L)
+    val committed = t.read().as[(String, Int)].collect().toMap
+    // the hint as a writer leaves it when it dies right after the link
+    java.nio.file.Files.delete(java.nio.file.Paths.get(root, "manifest.json"))
+    val opened = IcebergLikeTable.open(root)
+    assert(opened.readManifest().lastBatchId === 0L)
+    assert(opened.read().as[(String, Int)].collect().toMap === committed)
+    val empty = tmpDir("openlog") + "/never"
+    intercept[IllegalArgumentException] { IcebergLikeTable.open(empty) }
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(empty)),
+      "open constructed a table on a root with no commit")
+  }
+
+  test("the hint holds the newest entry's bytes after a merge, a compact and a trim; no temp is left") {
+    val root = tmpDir("hintbytes") + "/t"
+    val t = new IcebergLikeTable(root, numBuckets = 1, maxDeltasPerBucket = 2,
+      inlineCompaction = false, emptySchema = schema)
+    def check(after: String): Unit = {
+      val hint = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(root, "manifest.json"))
+      val newest = java.nio.file.Files.readAllBytes(entry(root, t.readManifest().commit))
+      assert(hint.sameElements(newest), s"hint != newest entry after $after")
+      val log = java.nio.file.Files.list(java.nio.file.Paths.get(root, "log"))
+      try assert(!log.iterator().asScala.exists(_.getFileName.toString.endsWith(".tmp")),
+        s"temp left under log/ after $after")
+      finally log.close()
+    }
+    t.merge(Seq(("a", 1)).toDF("conv_id", "n"), "conv_id", 0L)
+    check("merge")
+    t.merge(Seq(("a", 2)).toDF("conv_id", "n"), "conv_id", 1L)
+    assert(t.compact())
+    check("compact")
+    // the compacted-away deltas vanish, so vacuum publishes a trim
+    val before = t.readManifest()
+    assert(before.removed.nonEmpty)
+    before.removed.foreach(f => java.nio.file.Files.delete(java.nio.file.Paths.get(root, f)))
+    t.vacuum()
+    assert(t.readManifest().commit === before.commit + 1, "vacuum published no trim")
+    check("vacuum's trim")
   }
 }

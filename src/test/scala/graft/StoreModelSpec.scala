@@ -1,6 +1,7 @@
 package graft
 
 import scala.util.Random
+import graft.replay.Replay
 import graft.store.IcebergLikeTable
 
 /** Model-based fuzz of the store: random interleavings of merge /
@@ -8,9 +9,11 @@ import graft.store.IcebergLikeTable
   * in-memory model — current state, point lookups (the lazy `lookup` and
   * the driver-side `get`), change feed (upsert-only and with delete
   * markers; compactions and rebuckets reach its bases-only path, delta
-  * chains and markers its resolving one), and retained time travel all
-  * stay exact under any maintenance schedule. Deterministic seeds; both
-  * inline- and deferred-compaction tables.
+  * chains and markers its resolving one), the key sets of the full and
+  * incremental dumps (the bucket-aligned key reader, on every table state
+  * the schedule reaches), and retained time travel all stay exact under
+  * any maintenance schedule. Deterministic seeds; both inline- and
+  * deferred-compaction tables.
   */
 class StoreModelSpec extends SparkSpec {
   import spark.implicits._
@@ -23,6 +26,9 @@ class StoreModelSpec extends SparkSpec {
 
   private def run(seed: Int): Unit = {
     val rnd = new Random(seed)
+    // picks the incremental dump's since-batch apart from `rnd`, so the
+    // op sequence of each seed stays what it was
+    val pick = new Random(seed + 1)
     implicit val s: org.apache.spark.sql.SparkSession = spark
     val t = new IcebergLikeTable(tmpDir(s"model$seed"),
       numBuckets = 2 + rnd.nextInt(6),
@@ -38,6 +44,7 @@ class StoreModelSpec extends SparkSpec {
     var history = Map.empty[Long, Map[String, Int]]
     var version = -1L
     var deleted = Set.empty[String]
+    var lastMerge = -1L // the lineage window is [0, lastMerge]
 
     def read(): Map[String, Int] =
       t.read().as[(String, Int)].collect().toMap
@@ -53,6 +60,8 @@ class StoreModelSpec extends SparkSpec {
       t.readAsOf(v).as[(String, Int)].collect().toMap
     def lookup(k: String): Option[Int] =
       t.lookup("conv_id", k).as[(String, Int)].collect().headOption.map(_._2)
+    def keySet(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.as[String].collect().toSeq.sorted
     def get(k: String): Option[Int] = t.get(k).map { e =>
       assert(e.row.getUTF8String(0).toString == k, s"get($k) returned another key")
       e.row.getInt(1)
@@ -64,7 +73,11 @@ class StoreModelSpec extends SparkSpec {
         val ks = rnd.shuffle(keys).take(1 + rnd.nextInt(6))
         val vals = ks.map(k => k -> rnd.nextInt(1000))
         version += 1
-        assert(t.merge(vals.toDF("conv_id", "n"), "conv_id", version))
+        // with lineage, so the incremental dump's window check passes
+        val lineage = Seq(graft.model.LineageRecord(version, 0, ks.min, 0, ks.max, 0,
+          ks.size.toLong, new java.sql.Timestamp(1700000000000L + version))).toDF()
+        assert(t.merge(vals.toDF("conv_id", "n"), "conv_id", version, lineageDf = Some(lineage)))
+        lastMerge = version
         model = model ++ vals
         deleted = deleted -- ks
         vals.foreach { case (k, _) => changedAt += k -> version }
@@ -93,6 +106,11 @@ class StoreModelSpec extends SparkSpec {
           k -> model.get(k).fold[(Option[Int], Boolean)]((None, true))(n => (Some(n), false))
         },
         s"seed=$seed step=$step changesSince($since, includeDeletes)")
+      assert(keySet(Replay.dump(t)) == model.keys.toSeq.sorted, s"seed=$seed step=$step dump")
+      val from = pick.nextInt(lastMerge.toInt + 1).toLong
+      assert(keySet(Replay.incrementalDump(t, from)) ==
+        model.keys.filter(changedAt.getOrElse(_, -2L) > from).toSeq.sorted,
+        s"seed=$seed step=$step incrementalDump($from)")
       val k = keys(rnd.nextInt(keys.size))
       assert(lookup(k) == model.get(k), s"seed=$seed step=$step lookup($k)")
       // the driver-side read against the model and against `lookup`: a
