@@ -138,8 +138,8 @@ object SparkEntry {
     // aggregate view maintained from the change feed (delta view
     // maintenance: -old/+new group deltas, base never rescanned)
     "mv_maintain" -> (StreamQueries.mvMaintain _),
-    // the same replica through the readStream-able change-feed SOURCE
-    // (Structured Streaming over delta dirs, exactly-once MERGE sink)
+    // the same replica caught up with Trigger.AvailableNow (commit-offset
+    // change source, exactly-once MERGE sink)
     "cdc_stream" -> (StreamQueries.cdcStream _),
     // streaming exact dedup: digest-keyed store == DISTINCT md5(text)
     "corpus_ingest" -> (StreamQueries.corpusIngest _),

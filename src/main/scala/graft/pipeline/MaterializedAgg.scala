@@ -32,7 +32,12 @@ import graft.store.IcebergLikeTable
   * applied the batch), and the view's merge no-ops on its committed
   * batch id — either way every batch folds into the view exactly once.
   * (Replica-first would recompute old == new → zero deltas, then apply
-  * the zero batch to a view that never saw the real one.)
+  * the zero batch to a view that never saw the real one.) This needs the
+  * redelivered batch to equal the original, which the change source
+  * gives while the batch's end log entry is retained: re-run after that
+  * entry expired, the batch is read from the head, so a key changed
+  * again since lands in the replica at its newer state while the view
+  * keeps the older one.
   *
   * znap has no analog — its consumers refetch full entities on signal
   * (reference restapi/DynamoDBEntityReader.scala:38-73); this ships the
@@ -67,15 +72,15 @@ object MaterializedAgg {
       .start()
   }
 
-  /** One batch of delta maintenance (factored out so tests can drive
-    * redelivery explicitly).
+  /** One batch of delta maintenance, `up` holding one row per touched
+    * key as [[ChangeStream.changes]] delivers it (factored out so tests
+    * can drive redelivery explicitly).
     */
   def applyBatch(src: IcebergLikeTable, replica: IcebergLikeTable,
       mv: IcebergLikeTable, groupCol: String, sums: Seq[(String, String)],
-      df: DataFrame, batchId: Long): Unit = {
-    val up = ChangeStream.resolved(df, src.keyCol)
+      up: DataFrame, batchId: Long): Unit = {
     // persist before the emptiness probe (MergeSink.apply): the probe
-    // otherwise re-runs the change-resolution plan it then recomputes
+    // otherwise re-runs the batch's plan, which the merges then recompute
     up.persist()
     if (up.isEmpty) { up.unpersist(); return }
     val deltas = {

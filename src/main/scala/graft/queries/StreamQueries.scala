@@ -214,8 +214,8 @@ object StreamQueries {
   /** Builds (once per session+dir) the two-commit CDC source table: batch
     * 0 = fold of the first half of the event log (split at
     * floor(max(turn_idx)/2)), batch 1 = cumulative fold of every
-    * conversation the second half touches. Shared by cdc_read and
-    * cdc_follow.
+    * conversation the second half touches. Shared by every cdc row and
+    * mv_maintain.
     */
   private def cdcSource(s: SparkSession, d: String): (IcebergLikeTable, String) =
     cdcCache.getOrElseUpdate((s, d)) {
@@ -259,33 +259,21 @@ object StreamQueries {
               a.turn_count, a.first_ts_us, a.last_ts_us
        FROM a JOIN r ON a.conv_id = r.conv_id AND r.rn = 1"""
 
-  /** End-to-end ChangeFeed exhibit: a REPLICA table synced purely from
-    * the change feed of the cdc_read source table (two commits, coalesced
-    * by the checkpointed follower) must equal the full snapshot — so its
-    * read-back shares the s1 oracle. Machine-checked proof the follower
-    * runtime (replay/ChangeFeed: data-before-offset, keyed-merge
-    * idempotency) reconstructs exact state from changes alone.
+  /** A replica built purely from the change feed of the cdc_read source
+    * table must equal the full snapshot, so its read-back shares the s1
+    * oracle. It runs cdc_stream's code; both keys stay as regression rows.
     */
-  def cdcFollow(s: SparkSession, d: String): DataFrame = {
-    implicit val sp: SparkSession = s
-    val (src, tmp) = cdcSource(s, d)
-    val dst = new IcebergLikeTable(s"$tmp/dst", 8)
-    graft.replay.ChangeFeed.syncTo(src, dst, s"$tmp/ckpt/pos")
-    snapshotOracleView(dst.read())
-  }
+  def cdcFollow(s: SparkSession, d: String): DataFrame = cdcStream(s, d)
 
-  /** The CONTINUOUS form of cdc_follow: a replica built through the
-    * readStream-able change-feed source (replay/ChangeStream — a real
-    * Structured Streaming file source over the store's delta directories,
-    * checkpointed + exactly-once MERGE sink). Drained with
-    * Trigger.AvailableNow here; the replica must equal the full snapshot,
-    * so it shares the s1 oracle.
+  /** The change-feed replica through the commit-offset change source
+    * (replay/ChangeStream), drained with `Trigger.AvailableNow` into a
+    * fresh table on a fresh checkpoint, so every call replicates.
     */
   def cdcStream(s: SparkSession, d: String): DataFrame = {
     implicit val sp: SparkSession = s
     val src = cdcSource(s, d)._1
     val dst = new IcebergLikeTable(
-      Files.createTempDirectory("graft-cdc-stream").toString + "/table", 8)
+      Files.createTempDirectory("graft-cdc-replica").toString + "/table", 8)
     drain(s, src.root)(ckpt => graft.replay.ChangeStream.replicate(src, dst, ckpt))
     snapshotOracleView(dst.read())
   }
@@ -1007,11 +995,10 @@ object StreamQueries {
         drain(s, src.root)(ckpt => graft.replay.ChangeStream.changes(src).writeStream
           .option("checkpointLocation", ckpt)
           .foreachBatch { (df: DataFrame, batchId: Long) =>
-            // resolve once per batch, route each key to exactly one shard
-            val up = graft.replay.ChangeStream.resolved(df, src.keyCol)
-            up.persist()
-            try mergeShards(shards, up, batchId)
-            finally { up.unpersist(); () }
+            // one row per changed key: route each key to exactly one shard
+            df.persist()
+            try mergeShards(shards, df, batchId)
+            finally { df.unpersist(); () }
           }
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start())

@@ -1,101 +1,156 @@
 package graft.replay
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import java.util.Optional
+import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
+import org.apache.spark.sql.connector.read.streaming.{ReadLimit, ReportsSourceMetrics,
+  SupportsTriggerAvailableNow, Offset => OffsetV2}
+import org.apache.spark.sql.execution.streaming.{Offset, Source}
+import org.apache.spark.sql.execution.streaming.runtime.LongOffset
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.sql.sources.StreamSourceProvider
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
 import graft.store.IcebergLikeTable
 
-/** `readStream`-able change feed of an [[IcebergLikeTable]] — the
-  * CONTINUOUS form of [[ChangeFeed]]'s poll-and-merge follower: a
-  * Structured Streaming file source over the table's delta directories.
+/** The change feed of an [[IcebergLikeTable]] as a Structured Streaming
+  * source whose offset is the table's committed `lastBatchId` — znap's
+  * consumer cursor, one monotone offset into a replayable log, as Delta's
+  * `DeltaSource` (table version) and Iceberg's `SparkMicroBatchStream`
+  * (snapshot id) have it.
   *
-  * Why this is sound: every commit appends its upsert set as
-  * `data/delta-v<batchId>/…` parquet, one row per key per commit, each
-  * row stamped `__seq = batchId` — so the delta directories ARE the
-  * upsert change log, already durable, already ordered by `__seq`, with
-  * no extra write amplification. The file source discovers new
-  * `delta-v*` directories as commits land and its checkpoint makes
-  * delivery exactly-once per FILE; [[resolved]] + a `__seq`-aware MERGE
-  * make the downstream exactly-once per KEY (znap's signalling loop —
-  * reference pipeline/PipelineBuilder.scala:219-246 — upgraded from
-  * notify-then-refetch to direct change shipping).
+  * Batch (a, b] is [[IcebergLikeTable.readChangesBetween]]`(a, b)` with
+  * delete markers: every key changed by a commit in (a, b], at its state
+  * as of b, ONE row per key with its `__del` flag. A backlog of commits
+  * therefore coalesces into one pass that touches each key once, however
+  * far behind the consumer is.
   *
-  * Contracts (documented, test-pinned):
-  *  - A micro-batch may carry several commits (or a commit split across
-  *    batches — files are the unit): consumers resolve per batch with
-  *    [[resolved]] (last-writer-wins on `__seq`) and MERGE keyed by the
-  *    SINK batch id; re-delivery after a crash is absorbed by merge's
-  *    idempotency exactly like [[ChangeFeed]].
-  *  - Data-before-commit ordering means a delta written by a merge that
-  *    then LOSES the commit CAS can be observed before its writer
-  *    retries; the retry overwrites the same directory with the same
-  *    batch id, and per-key `__seq` resolution supersedes any phantom.
-  *  - Retention: compaction folds delta chains into bases and GC deletes
-  *    them; a consumer must stay within the delta retention window.
-  *    Pair long-lag consumers with deferred compaction + graced vacuum
-  *    (the Maintain CLI contract) — the same window the poll-based
-  *    [[ChangeFeed]] documents.
+  * Contracts (test-pinned in ChangeStreamSpec):
+  *  - Exactly-once end to end: Spark logs (a, b] before the batch runs
+  *    and commits it after the sink returns, so a crash in between
+  *    re-runs the same range; a sink that MERGEs keyed by the sink batch
+  *    id (as [[replicate]] does) absorbs the re-delivery.
+  *  - A batch reads only files that a published log entry names: an
+  *    orphan delta — a crashed writer's, or a merge's that lost the
+  *    commit compare-and-swap — is never delivered.
+  *  - No retention window on lag: once entry b has expired, the batch
+  *    reads [[IcebergLikeTable.readChangesSince]]`(a)` on the head
+  *    instead, which is exact across compaction, rebucket and vacuum
+  *    because each row keeps its `__seq`. The one loss is a delete
+  *    marker dropped by [[IcebergLikeTable.purgeDeletes]]: an offset
+  *    below the table's `purgedDeletesTo` fails the query with
+  *    [[InvalidOffsetException]].
+  *  - Lag is visible: each progress carries `batchesBehindLatest` (head
+  *    `lastBatchId` minus the batch's end offset) in
+  *    `StreamingQueryProgress.sources(0).metrics`, under every trigger.
+  *  - The table must have committed before a stream over it starts; the
+  *    stream's schema is the committed schema then (+ `__del`).
   */
 object ChangeStream {
 
-  /** The raw change stream: one row per (key, commit), `__seq` = the
-    * commit batch id, current committed schema (older files read evolved
-    * columns as null) plus the `__del` delete marker (null/false =
-    * upsert; true = the key was deleted by that commit — consumers that
-    * MERGE the resolved batch into another table apply the delete for
-    * free, since the marker row merges as a marker).
-    * `maxFilesPerTrigger` bounds micro-batch size.
+  /** A consumer's offset lies below the table's delete-purge floor: the
+    * deletes it has not seen may be gone, so a replica built from here on
+    * could keep keys the table deleted. Rebuild the consumer from scratch
+    * (a fresh checkpoint and target).
     */
-  def changes(table: IcebergLikeTable, maxFilesPerTrigger: Int = 32)(
-      implicit spark: SparkSession): DataFrame = {
-    val withSeq = StructType(table.schema().fields ++ Seq(
-      StructField("__seq", LongType),
-      StructField(IcebergLikeTable.DeleteCol, BooleanType)))
-    spark.readStream
-      .schema(withSeq)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      // the writer's __bucket=N dirs are physical layout, not data:
-      // recursive lookup skips partition inference (which would otherwise
-      // demand one basePath across the per-commit delta-v* roots)
-      .option("recursiveFileLookup", "true")
-      .parquet(s"${table.root}/data/delta-v*")
+  final class InvalidOffsetException(msg: String) extends IllegalStateException(msg)
+
+  /** The change stream of `table`: the committed schema plus `__del`
+    * (non-null; true = the key was deleted), one row per changed key per
+    * batch. MERGEing a batch into another table applies its deletes too,
+    * since the marker rows merge as markers.
+    */
+  def changes(table: IcebergLikeTable)(implicit spark: SparkSession): DataFrame = {
+    // every column nullable: a marker row carries no payload
+    val schema = StructType((table.schema().fields :+
+      StructField(IcebergLikeTable.DeleteCol, BooleanType)).map(_.copy(nullable = true)))
+    spark.readStream.format(classOf[ChangeSourceProvider].getName)
+      .schema(schema).load(table.root)
   }
 
-  /** Per-batch last-writer-wins resolution: at most one row per key (the
-    * greatest `__seq`) — the shape [[IcebergLikeTable.merge]] requires.
-    * Uses the native latest_by (ObjectHashAggregate, map-side combine).
-    */
-  def resolved(batch: DataFrame, keyCol: String): DataFrame = {
-    val payload = batch.columns.filter(_ != keyCol)
-    batch.groupBy(col(keyCol))
-      .agg(graft.functions.GraftFunctions.latest_by(
-        struct(payload.map(col): _*), col("__seq")).as("__r"))
-      .select(col(keyCol) +: payload.map(c => col(s"__r.$c").as(c)): _*)
-      .drop("__seq")
-  }
-
-  /** Continuous replica: stream `src`'s change feed into `dst` with an
-    * exactly-once MERGE sink (checkpointed file-source offsets + merges
-    * keyed by sink batch id). `availableNow = true` drains what exists
-    * and stops (the catch-up form); `false` keeps following.
+  /** Continuous replica: stream `src`'s changes into `dst` with an
+    * exactly-once MERGE sink keyed by the sink batch id.
+    * `availableNow = true` drains what exists and stops (the catch-up
+    * form); `false` keeps following.
     */
   def replicate(src: IcebergLikeTable, dst: IcebergLikeTable, ckpt: String,
-      availableNow: Boolean = true, maxFilesPerTrigger: Int = 32)(
-      implicit spark: SparkSession): StreamingQuery = {
-    val writer = changes(src, maxFilesPerTrigger).writeStream
+      availableNow: Boolean = true)(implicit spark: SparkSession): StreamingQuery = {
+    val writer = changes(src).writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (df: DataFrame, batchId: Long) =>
-        // persist before the emptiness probe — see MergeSink.apply: the
-        // probe otherwise re-runs the change-resolution once for the
-        // probe and once for the merge
-        val up = resolved(df, dst.keyCol)
-        up.persist()
-        try {
-          if (!up.isEmpty) { dst.merge(up, dst.keyCol, batchId); () }
-        } finally { up.unpersist(); () }
+        dst.merge(df, dst.keyCol, batchId); ()
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
       .start()
   }
+}
+
+/** Instantiated by Spark from its class name (`readStream.format`), so no
+  * service registration is needed. `path` is the table root; the schema
+  * is the one [[ChangeStream.changes]] fixes when the stream starts.
+  */
+final class ChangeSourceProvider extends StreamSourceProvider {
+  override def sourceSchema(sqlContext: SQLContext, schema: Option[StructType],
+      providerName: String, parameters: Map[String, String]): (String, StructType) =
+    ("graft-changes", schema.getOrElse(throw new IllegalArgumentException(
+      "the change source is started through ChangeStream.changes")))
+
+  override def createSource(sqlContext: SQLContext, metadataPath: String,
+      schema: Option[StructType], providerName: String,
+      parameters: Map[String, String]): Source = {
+    implicit val spark: SparkSession = sqlContext.sparkSession
+    new ChangeSource(IcebergLikeTable.open(parameters("path")),
+      sourceSchema(sqlContext, schema, providerName, parameters)._2)
+  }
+}
+
+/** The commit-offset source behind [[ChangeStream.changes]]. It is its
+  * own `SupportsTriggerAvailableNow`: Spark's wrapper for plain sources
+  * does not pass on `ReportsSourceMetrics`, which would hide the lag
+  * under `Trigger.AvailableNow`.
+  */
+private[replay] final class ChangeSource(table: IcebergLikeTable,
+    override val schema: StructType)(implicit spark: SparkSession)
+    extends Source with SupportsTriggerAvailableNow with ReportsSourceMetrics {
+
+  /** AvailableNow's end: the head when the query started. */
+  @volatile private var bound = Long.MaxValue
+
+  private def head(): Long = table.readManifest().lastBatchId
+
+  /** A LongOffset, or its serialized form read back from the checkpoint. */
+  private def batchOf(o: OffsetV2): Long = o.json.toLong
+
+  override def prepareForTriggerAvailableNow(): Unit = bound = head()
+
+  override def getOffset: Option[Offset] =
+    Some(math.min(head(), bound)).filter(_ >= 0L).map(LongOffset(_))
+
+  override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 =
+    getOffset.orNull
+
+  override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
+    val from = start.map(batchOf).getOrElse(-1L)
+    val to = batchOf(end)
+    val purged = table.readManifest().purgedDeletesTo
+    if (start.isDefined && from < purged) throw new ChangeStream.InvalidOffsetException(
+      s"offset $from of ${table.root} is below its delete-purge floor $purged: " +
+        "deletes up to the floor may be missing — rebuild the consumer")
+    val changes =
+      if (table.manifestVersions().contains(to))
+        table.readChangesBetween(from, to, includeDeletes = true)
+      else table.readChangesSince(from, includeDeletes = true)
+    val have = changes.columns.toSet
+    val projected = changes.select(schema.fields.toSeq.map(f =>
+      if (have(f.name)) col(f.name) else lit(null).cast(f.dataType).as(f.name)): _*)
+    Shim.internalDataFrame(spark, projected.queryExecution.toRdd, schema,
+      isStreaming = true)
+  }
+
+  override def metrics(latest: Optional[OffsetV2]): java.util.Map[String, String] = {
+    val consumed = if (latest.isPresent) batchOf(latest.get) else -1L
+    java.util.Map.of("batchesBehindLatest", (head() - consumed).toString)
+  }
+
+  override def stop(): Unit = ()
 }

@@ -861,6 +861,13 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
     * (newer rows live in newer files); (3) old rows carried into a
     * post-since base by compaction carry their true (≤ sinceBatch) seq.
     *
+    * Retention: none. The read needs only the head's files, so it stays
+    * exact however old `sinceBatch` is — across compaction, rebucket,
+    * optimize and vacuum. The one loss is a delete marker that
+    * [[purgeDeletes]] dropped: a since-read from below the purge floor
+    * misses that delete ([[graft.replay.ChangeStream]] fails such an
+    * offset fast).
+    *
     * How it is read: `__seq > sinceBatch` filters the candidate scan
     * BEFORE last-writer-wins resolution (the filter pushes into the
     * Parquet read). That is exact: a key whose latest seq is above
@@ -1309,17 +1316,10 @@ final class IcebergLikeTable(val root: String, val numBuckets: Int,
     * [[compact]], same single-writer atomic commit, CDC `__seq` (and any
     * delete markers) preserved. Cluster columns must be integral.
     *
-    * CDC-retention hazard (sharper than incremental compaction's): this
-    * folds EVERY delta chain into the new clustered base in one commit
-    * and tombstones every delta-v* file — once they leave the retained
-    * manifests, a [[ChangeStream]]/change-feed consumer checkpointed
-    * before this commit finds its undelivered files GONE (stream failure
-    * or, worse, silently missed changes). Incremental compaction clears
-    * at most one bucket's bounded chain per commit; OPTIMIZE clears the
-    * table's whole replay history at once. Run it only when followers
-    * are caught up, or shield the window with a vacuum grace /
-    * raised `retainManifests` — the same retention contract documented
-    * on [[readChangesSince]] and ChangeStream.
+    * Change-feed consumers need no care: [[readChangesSince]] stays exact
+    * across the rewrite, since each row keeps its `__seq`; only its cost
+    * grows, as a since-read from before this commit scans the whole new
+    * base (its directory version is the head's).
     */
   def optimize(clusterBy: Seq[String]): Boolean = {
     require(clusterBy.nonEmpty && clusterBy.size <= 2,

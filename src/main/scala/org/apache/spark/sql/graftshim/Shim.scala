@@ -33,13 +33,15 @@ object Shim {
   /** DataFrame over an RDD of rows already in Catalyst's internal form
     * (`internalCreateDataFrame` is private[sql]) — lets the store hand a
     * hand-built scan to callers as an ordinary DataFrame, with no per-row
-    * conversion from external rows.
+    * conversion from external rows. `isStreaming` marks the frame as a
+    * streaming source's micro-batch, which Spark requires of `getBatch`.
     */
   def internalDataFrame(spark: org.apache.spark.sql.SparkSession,
       rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+      schema: org.apache.spark.sql.types.StructType,
+      isStreaming: Boolean = false): org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rows, schema)
+      .internalCreateDataFrame(rows, schema, isStreaming)
 
   /** Register a native-Expression SQL function on an EXISTING session
     * (the FunctionRegistry is private[sql]; new sessions can instead use

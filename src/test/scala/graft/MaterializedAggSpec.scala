@@ -37,9 +37,7 @@ class MaterializedAggSpec extends SparkSpec {
 
   private def drain(src: IcebergLikeTable, replica: IcebergLikeTable,
       mv: IcebergLikeTable, ckpt: String): Unit = {
-    MaterializedAgg.maintain(src, replica, mv, "last_role", sums, ckpt)
-      .awaitTermination(120000)
-    ()
+    awaitDone(MaterializedAgg.maintain(src, replica, mv, "last_role", sums, ckpt))
   }
 
   test("maintained view == from-scratch GROUP BY across inserts, updates, migration") {
@@ -57,14 +55,15 @@ class MaterializedAggSpec extends SparkSpec {
 
   test("crash between view merge and replica merge: redelivery converges") {
     val src = mkSrc("mvbsrc"); val replica = mkSrc("mvbrep"); val mv = mkMv("mvb")
-    // batch shape as ChangeStream.changes delivers it: payload + __seq
+    // batch shape as ChangeStream.changes delivers it: one row per key
+    // with its __del flag
     val up0 = snap(("a", "user", 3L), ("b", "tool", 5L))
     val up1 = snap(("a", "tool", 7L))
     src.merge(up0, "conv_id", 0L)
-    val b0 = up0.withColumn("__seq", lit(0L))
+    val b0 = up0.withColumn(IcebergLikeTable.DeleteCol, lit(false))
     MaterializedAgg.applyBatch(src, replica, mv, "last_role", sums, b0, 0L)
     src.merge(up1, "conv_id", 1L)
-    val b1 = up1.withColumn("__seq", lit(1L))
+    val b1 = up1.withColumn(IcebergLikeTable.DeleteCol, lit(false))
     // crash simulation: view merged, replica merge lost — rerun the batch
     mvMergeOnly(src, replica, mv, b1, 1L)
     MaterializedAgg.applyBatch(src, replica, mv, "last_role", sums, b1, 1L)
@@ -77,9 +76,9 @@ class MaterializedAggSpec extends SparkSpec {
     * state a crash between the two merges leaves behind.
     */
   private def mvMergeOnly(src: IcebergLikeTable, replica: IcebergLikeTable,
-      mv: IcebergLikeTable, df: org.apache.spark.sql.DataFrame,
+      mv: IcebergLikeTable, batch: org.apache.spark.sql.DataFrame,
       batchId: Long): Unit = {
-    val up = graft.replay.ChangeStream.resolved(df, src.keyCol)
+    val up = batch.drop(IcebergLikeTable.DeleteCol)
     val old = replica.read()
       .join(up.select(src.keyCol), Seq(src.keyCol), "left_semi")
     def contrib(d: org.apache.spark.sql.DataFrame, sign: Long) = d.select(
@@ -103,11 +102,9 @@ class MaterializedAggSpec extends SparkSpec {
     // tombstone path under test)
     val up0 = snap(("a", "user", 3L)); val up1 = snap(("a", "tool", 4L))
     src.merge(up0, "conv_id", 0L)
-    MaterializedAgg.applyBatch(src, replica, mv, "last_role", sums,
-      up0.withColumn("__seq", lit(0L)), 0L)
+    MaterializedAgg.applyBatch(src, replica, mv, "last_role", sums, up0, 0L)
     src.merge(up1, "conv_id", 1L) // 'user' drops to 0
-    MaterializedAgg.applyBatch(src, replica, mv, "last_role", sums,
-      up1.withColumn("__seq", lit(1L)), 1L)
+    MaterializedAgg.applyBatch(src, replica, mv, "last_role", sums, up1, 1L)
     assert(viewOf(mv) == Map("tool" -> ((1L, 4L))))
     // tombstone row exists in the table but not in the read view
     assert(mv.read().count() == 2)

@@ -8,6 +8,14 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Wait for a self-terminating (`AvailableNow`) query, failing on a
+    * timeout; the query is stopped either way, so no spec leaves one
+    * running.
+    */
+  def awaitDone(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
+    try assert(q.awaitTermination(120000), s"query ${q.id} did not terminate")
+    finally q.stop()
 }
 
 object SparkSpec {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.pipeline.MaterializedAgg
-import graft.replay.{ChangeFeed, ChangeStream}
+import graft.replay.ChangeStream
 import graft.store.IcebergLikeTable
 
 /** Row-level deletes (merge-on-read equality-delete markers): snapshot
@@ -74,26 +74,19 @@ class StoreDeleteSpec extends SparkSpec {
     assert(!up.columns.contains(IcebergLikeTable.DeleteCol))
   }
 
-  test("ChangeFeed.syncTo replicates deletes") {
-    val t = mk(); val r = mk()
-    val ckpt = tmpDir("graft-del-ck") + "/pos"
-    t.merge(snap("a" -> 1, "b" -> 2), "conv_id", 0L)
-    ChangeFeed.syncTo(t, r, ckpt)
-    assert(state(r) == Map("a" -> 1, "b" -> 2))
-    t.delete(Seq("a").toDF("conv_id"), 1L)
-    t.merge(snap("c" -> 3), "conv_id", 2L)
-    ChangeFeed.syncTo(t, r, ckpt)
-    assert(state(r) == Map("b" -> 2, "c" -> 3))
-  }
-
   test("ChangeStream.replicate applies deletes through the file stream") {
     val t = mk(); val r = mk()
     val ckpt = tmpDir("graft-del-cs")
     t.merge(snap("a" -> 1, "b" -> 2), "conv_id", 0L)
     t.delete(Seq("b").toDF("conv_id"), 1L)
-    val q = ChangeStream.replicate(t, r, ckpt)
-    q.awaitTermination(600000)
+    awaitDone(ChangeStream.replicate(t, r, ckpt))
     assert(state(r) == Map("a" -> 1))
+    // a delete and a merge after the replica caught up: the restarted
+    // replica applies both
+    t.delete(Seq("a").toDF("conv_id"), 2L)
+    t.merge(snap("c" -> 3), "conv_id", 3L)
+    awaitDone(ChangeStream.replicate(t, r, ckpt))
+    assert(state(r) == Map("c" -> 3))
   }
 
   test("maintained aggregate view applies deletes as (−old) only") {
@@ -113,12 +106,12 @@ class StoreDeleteSpec extends SparkSpec {
     val t0 = withGrp(snap("a" -> 1, "b" -> 2, "z" -> 5))
     src.merge(t0, "conv_id", 0L)
     val ckpt = tmpDir("graft-del-mvck")
-    MaterializedAgg.maintain(src, rep, mv, "grp",
-      Seq("turn_count" -> "turns"), ckpt).awaitTermination(600000)
+    awaitDone(MaterializedAgg.maintain(src, rep, mv, "grp",
+      Seq("turn_count" -> "turns"), ckpt))
     assert(mvState == Map("lo" -> ((2L, 3L)), "hi" -> ((1L, 5L))))
     src.delete(Seq("b").toDF("conv_id"), 1L)
-    MaterializedAgg.maintain(src, rep, mv, "grp",
-      Seq("turn_count" -> "turns"), ckpt).awaitTermination(600000)
+    awaitDone(MaterializedAgg.maintain(src, rep, mv, "grp",
+      Seq("turn_count" -> "turns"), ckpt))
     assert(mvState == Map("lo" -> ((1L, 1L)), "hi" -> ((1L, 5L))))
   }
 
@@ -127,9 +120,8 @@ class StoreDeleteSpec extends SparkSpec {
     t.merge(snap("a" -> 1, "b" -> 2), "conv_id", 0L)
     assert(!t.readManifest().hasDeletes)
     // a change-stream replica's batches always CARRY the marker column
-    // (static stream schema) — an all-null column must not flip the flag
-    val q = ChangeStream.replicate(t, r, tmpDir("graft-del-flag"))
-    q.awaitTermination(600000)
+    // (static stream schema) — an all-false column must not flip the flag
+    awaitDone(ChangeStream.replicate(t, r, tmpDir("graft-del-flag")))
     assert(state(r) == Map("a" -> 1, "b" -> 2))
     assert(!r.readManifest().hasDeletes)
     t.delete(Seq("a").toDF("conv_id"), 1L)

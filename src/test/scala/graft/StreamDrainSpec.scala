@@ -49,9 +49,7 @@ class StreamDrainSpec extends SparkSpec {
     src.merge(Seq("a" -> 1, "b" -> 1).toDF("conv_id", "n"), "conv_id", 0L)
     src.merge(Seq("b" -> 2, "c" -> 1).toDF("conv_id", "n"), "conv_id", 1L)
     src.merge(Seq("a" -> 3, "d" -> 4).toDF("conv_id", "n"), "conv_id", 2L)
-    // one file per trigger: the drain must outlast several AvailableNow batches
-    StreamDrain.drain(spark, src.root)(ckpt =>
-      ChangeStream.replicate(src, dst, ckpt, maxFilesPerTrigger = 1))
+    StreamDrain.drain(spark, src.root)(ckpt => ChangeStream.replicate(src, dst, ckpt))
     assert(spark.streams.active.isEmpty)
     assert(content(dst) === Map("a" -> 3, "b" -> 2, "c" -> 1, "d" -> 4))
     assert(content(dst) === content(src))
@@ -66,6 +64,8 @@ class StreamDrainSpec extends SparkSpec {
     assert(full.nonEmpty)
     (1 to 2).foreach { _ =>
       assert(StreamQueries.cdcStream(spark, dir).collect().toSet === full)
+      assert(spark.streams.active.isEmpty)
+      assert(StreamQueries.cdcFollow(spark, dir).collect().toSet === full)
       assert(spark.streams.active.isEmpty)
     }
   }
