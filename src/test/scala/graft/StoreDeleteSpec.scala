@@ -81,12 +81,20 @@ class StoreDeleteSpec extends SparkSpec {
     t.delete(Seq("b").toDF("conv_id"), 1L)
     awaitDone(ChangeStream.replicate(t, r, ckpt))
     assert(state(r) == Map("a" -> 1))
+  }
+
+  test("ChangeStream.replicate applies a delete made after the replica caught up") {
+    val t = mk(); val r = mk()
+    val ckpt = tmpDir("graft-del-cs2")
+    t.merge(snap("a" -> 1, "b" -> 2), "conv_id", 0L)
+    awaitDone(ChangeStream.replicate(t, r, ckpt))
+    assert(state(r) == Map("a" -> 1, "b" -> 2))
     // a delete and a merge after the replica caught up: the restarted
     // replica applies both
-    t.delete(Seq("a").toDF("conv_id"), 2L)
-    t.merge(snap("c" -> 3), "conv_id", 3L)
+    t.delete(Seq("a").toDF("conv_id"), 1L)
+    t.merge(snap("c" -> 3), "conv_id", 2L)
     awaitDone(ChangeStream.replicate(t, r, ckpt))
-    assert(state(r) == Map("c" -> 3))
+    assert(state(r) == Map("b" -> 2, "c" -> 3))
   }
 
   test("maintained aggregate view applies deletes as (−old) only") {
