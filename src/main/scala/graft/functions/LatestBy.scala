@@ -63,13 +63,6 @@ case class LatestBy(payload: Expression, ord1: Expression, ord2: Expression,
   override def dataType: DataType = payload.dataType
   override def nullable: Boolean = true
 
-  private def ordLong(v: Any): Long = v match {
-    case i: Int => i.toLong
-    case l: Long => l
-    case s: Short => s.toLong
-    case b: Byte => b.toLong
-    case other => other.asInstanceOf[Number].longValue()
-  }
 
   override def createAggregationBuffer(): LatestBy.Buf = new LatestBy.Buf
 

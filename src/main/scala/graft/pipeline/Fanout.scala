@@ -43,12 +43,4 @@ object Fanout {
         .foreachBatch(MergeSink(t.table, t.publishType) _)
         .start()
     }
-
-  /** Run all targets to completion over a bounded (file) source. */
-  def runAll(turns: Dataset[Turn], targets: Seq[Target],
-      watermark: String = "10 minutes"): Unit = {
-    val qs = start(turns, targets, watermark)
-    try qs.foreach(_.processAllAvailable())
-    finally qs.foreach(_.stop())
-  }
 }

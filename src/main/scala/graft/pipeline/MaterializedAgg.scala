@@ -34,10 +34,10 @@ import graft.store.IcebergLikeTable
   * (Replica-first would recompute old == new → zero deltas, then apply
   * the zero batch to a view that never saw the real one.) This needs the
   * redelivered batch to equal the original, which the change source
-  * gives while the batch's end log entry is retained: re-run after that
-  * entry expired, the batch is read from the head, so a key changed
-  * again since lands in the replica at its newer state while the view
-  * keeps the older one.
+  * gives while the batch's end log entry is retained. Re-run after that
+  * entry expired, the batch is read from the head and may carry keys
+  * changed since at their newer state, which the view never saw: that
+  * redelivery fails the query, and the view and replica must be rebuilt.
   *
   * znap has no analog — its consumers refetch full entities on signal
   * (reference restapi/DynamoDBEntityReader.scala:38-73); this ships the
@@ -83,6 +83,12 @@ object MaterializedAgg {
     // otherwise re-runs the batch's plan, which the merges then recompute
     up.persist()
     if (up.isEmpty) { up.unpersist(); return }
+    if (mv.readManifest().lastBatchId >= batchId &&
+        replica.readManifest().lastBatchId < batchId && ChangeStream.readFromHead(up)) {
+      up.unpersist() // the re-read may differ from what the view applied
+      throw new IllegalStateException(s"batch $batchId of ${src.root} re-ran from the " +
+        "head after a crash between the merges: rebuild the view and its replica")
+    }
     val deltas = {
       // pre-image rows of the touched keys, read from the not-yet-merged
       // replica with bucket pruning: only the files of the buckets the

@@ -1,9 +1,13 @@
 package graft.replay
 
 import java.util.Optional
+import org.apache.spark.{Dependency, OneToOneDependency, Partition, SparkContext, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.streaming.{ReadLimit, ReportsSourceMetrics,
   SupportsTriggerAvailableNow, Offset => OffsetV2}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.functions.{col, lit}
@@ -36,10 +40,14 @@ import graft.store.IcebergLikeTable
   *  - No retention window on lag: once entry b has expired, the batch
   *    reads [[IcebergLikeTable.readChangesSince]]`(a)` on the head
   *    instead, which is exact across compaction, rebucket and vacuum
-  *    because each row keeps its `__seq`. The one loss is a delete
-  *    marker dropped by [[IcebergLikeTable.purgeDeletes]]: an offset
-  *    below the table's `purgedDeletesTo` fails the query with
+  *    because each row keeps its `__seq` ([[readFromHead]] tells a sink
+  *    which read a batch got). The one loss is a delete marker dropped
+  *    by [[IcebergLikeTable.purgeDeletes]]: a batch that starts below the
+  *    table's `purgedDeletesTo` fails the query with
   *    [[InvalidOffsetException]].
+  *  - A batch is read when a job first runs over it, not in `getBatch`:
+  *    the committed batch Spark re-plans on restart to set the source up
+  *    is neither read nor checked against the purge floor.
   *  - Lag is visible: each progress carries `batchesBehindLatest` (head
   *    `lastBatchId` minus the batch's end offset) in
   *    `StreamingQueryProgress.sources(0).metrics`, under every trigger.
@@ -66,6 +74,18 @@ object ChangeStream {
       StructField(IcebergLikeTable.DeleteCol, BooleanType)).map(_.copy(nullable = true)))
     spark.readStream.format(classOf[ChangeSourceProvider].getName)
       .schema(schema).load(table.root)
+  }
+
+  /** Whether `batch`, as a sink got it from [[changes]], was read from the
+    * head because its end log entry had expired: re-run after a crash, it
+    * can differ from its first run. False for any other frame.
+    */
+  def readFromHead(batch: DataFrame): Boolean = {
+    def found(rdd: RDD[_]): Boolean = rdd match {
+      case b: ChangeBatch => b.fromHead
+      case r => r.dependencies.exists(d => found(d.rdd))
+    }
+    batch.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd }.exists(found)
   }
 
   /** Continuous replica: stream `src`'s changes into `dst` with an
@@ -130,21 +150,27 @@ private[replay] final class ChangeSource(table: IcebergLikeTable,
     getOffset.orNull
 
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
-    val from = start.map(batchOf).getOrElse(-1L)
     val to = batchOf(end)
+    Shim.internalDataFrame(spark,
+      new ChangeBatch(spark.sparkContext, () => read(start, to)), schema,
+      isStreaming = true)
+  }
+
+  /** Batch (start, to] and whether it was read from the head. */
+  private def read(start: Option[Offset], to: Long): (RDD[InternalRow], Boolean) = {
+    val from = start.map(batchOf).getOrElse(-1L)
     val purged = table.readManifest().purgedDeletesTo
     if (start.isDefined && from < purged) throw new ChangeStream.InvalidOffsetException(
       s"offset $from of ${table.root} is below its delete-purge floor $purged: " +
         "deletes up to the floor may be missing — rebuild the consumer")
+    val fromHead = !table.manifestVersions().contains(to)
     val changes =
-      if (table.manifestVersions().contains(to))
-        table.readChangesBetween(from, to, includeDeletes = true)
-      else table.readChangesSince(from, includeDeletes = true)
+      if (fromHead) table.readChangesSince(from, includeDeletes = true)
+      else table.readChangesBetween(from, to, includeDeletes = true)
     val have = changes.columns.toSet
     val projected = changes.select(schema.fields.toSeq.map(f =>
       if (have(f.name)) col(f.name) else lit(null).cast(f.dataType).as(f.name)): _*)
-    Shim.internalDataFrame(spark, projected.queryExecution.toRdd, schema,
-      isStreaming = true)
+    (projected.queryExecution.toRdd, fromHead)
   }
 
   override def metrics(latest: Optional[OffsetV2]): java.util.Map[String, String] = {
@@ -153,4 +179,26 @@ private[replay] final class ChangeSource(table: IcebergLikeTable,
   }
 
   override def stop(): Unit = ()
+}
+
+/** One change batch, read when a job is first planned over it: built in
+  * `getBatch`, AQE would run the read's shuffle even for the committed
+  * batch Spark re-plans on restart and drops.
+  */
+private[replay] final class ChangeBatch(sc: SparkContext,
+    @transient private val build: () => (RDD[InternalRow], Boolean))
+    extends RDD[InternalRow](sc, Nil) {
+
+  @transient private lazy val built = build()
+
+  /** See [[ChangeStream.readFromHead]]; reads the batch if no job has. */
+  def fromHead: Boolean = built._2
+
+  override protected def getDependencies: Seq[Dependency[_]] =
+    Seq(new OneToOneDependency(built._1))
+
+  override protected def getPartitions: Array[Partition] = built._1.partitions
+
+  override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] =
+    dependencies.head.rdd.asInstanceOf[RDD[InternalRow]].iterator(split, context)
 }

@@ -11,7 +11,9 @@ import graft.store.IcebergLikeTable
   * offsets are commits, so a replica converges however far it lags —
   * across compaction, vacuum and expired log entries — exactly once
   * through the streaming checkpoint; orphan files are never delivered;
-  * purged deletes fail the offset fast; lag shows in the progress.
+  * purged deletes fail an offset below the floor, never a restart whose
+  * last applied batch spans it; a restart re-reads nothing; lag shows in
+  * the progress.
   */
 class ChangeStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -201,6 +203,49 @@ class ChangeStreamSpec extends SparkSpec {
     val fresh = mk("cspurgefresh")
     awaitDone(ChangeStream.replicate(src, fresh, tmpDir("cspurgeck2") + "/ckpt"))
     assert(content(fresh) === Map("a" -> 1, "c" -> 1))
+  }
+
+  test("a purge inside the last applied batch's range does not fail a restart") {
+    val src = mk("cspurge3"); val dst = mk("cspurge3dst")
+    val ckpt = tmpDir("cspurge3ck") + "/ckpt"
+    src.merge(snap("a" -> 1, "b" -> 1), "conv_id", 0L)
+    awaitDone(ChangeStream.replicate(src, dst, ckpt))
+    src.delete(Seq("b").toDF("conv_id"), 1L)
+    src.merge(snap("c" -> 1), "conv_id", 2L)
+    awaitDone(ChangeStream.replicate(src, dst, ckpt)) // batch (0, 2]
+    src.purgeDeletes(beforeBatch = 2L)
+    assert(src.readManifest().purgedDeletesTo === 1L) // inside (0, 2]
+    // each restart re-plans (0, 2] to set the source up; the consumer has
+    // applied it, so neither restart may fail
+    awaitDone(ChangeStream.replicate(src, dst, ckpt))
+    src.merge(snap("d" -> 1), "conv_id", 3L)
+    awaitDone(ChangeStream.replicate(src, dst, ckpt))
+    assert(content(dst) === Map("a" -> 1, "c" -> 1, "d" -> 1))
+    assert(content(dst) === content(src))
+  }
+
+  test("a restart with nothing new runs no job") {
+    val src = mk("csrestart"); val dst = mk("csrestartdst")
+    val ckpt = tmpDir("csrestartck") + "/ckpt"
+    // a delta chain, so the change read resolves through a shuffle
+    src.merge(snap("a" -> 1, "b" -> 1), "conv_id", 0L)
+    src.merge(snap("a" -> 2), "conv_id", 1L)
+    awaitDone(ChangeStream.replicate(src, dst, ckpt))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.sql.graftshim.Shim.waitListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      awaitDone(ChangeStream.replicate(src, dst, ckpt))
+      org.apache.spark.sql.graftshim.Shim.waitListenerBus(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // the committed batch Spark re-plans on restart is never read
+    assert(jobs.get === 0)
+    assert(content(dst) === Map("a" -> 2, "b" -> 1))
   }
 
   test("batchesBehindLatest reports the lag under either trigger") {

@@ -1,15 +1,20 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import org.apache.spark.sql.types.StructType
 import graft.pipeline.MaterializedAgg
+import graft.replay.ChangeStream
 import graft.store.IcebergLikeTable
 
 /** Incremental aggregate view maintenance (pipeline/MaterializedAgg):
   * delta folding equals a from-scratch GROUP BY after every commit,
   * group migration subtracts from the old group, redelivery after a
   * crash between the view merge and the replica merge converges (the
-  * view-before-replica ordering contract), and zero-membership groups
+  * view-before-replica ordering contract) unless the redelivery was read
+  * from the head after its log entry expired, which fails instead of
+  * diverging, and zero-membership groups
   * are tombstoned out of the read view.
   */
 class MaterializedAggSpec extends SparkSpec {
@@ -69,6 +74,38 @@ class MaterializedAggSpec extends SparkSpec {
     MaterializedAgg.applyBatch(src, replica, mv, "last_role", sums, b1, 1L)
     assert(viewOf(mv) == direct(src))
     assert(viewOf(mv) == Map("tool" -> ((2L, 12L))))
+  }
+
+  test("a crash between the merges, then the batch's log entry expires: the re-run fails") {
+    val src = mkSrc("mvdsrc"); val replica = mkSrc("mvdrep"); val mv = mkMv("mvd")
+    val ckpt = tmpDir("mvdckpt") + "/c"
+    src.merge(snap(("a", "user", 3L), ("b", "tool", 5L)), "conv_id", 0L)
+    drain(src, replica, mv, ckpt)
+    src.merge(snap(("a", "tool", 7L)), "conv_id", 1L)
+    // the view merges batch 1, then the query dies before the replica merge
+    val crashed = ChangeStream.changes(src).writeStream
+      .option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow())
+      .foreachBatch { (df: DataFrame, id: Long) =>
+        mvMergeOnly(src, replica, mv, df, id)
+        throw new IllegalStateException("crash between the merges")
+      }.start()
+    try intercept[StreamingQueryException](crashed.awaitTermination(120000))
+    finally crashed.stop()
+    // while the query is down, `a` changes again and batch 1's end entry
+    // expires: its re-run would read `a` at a state the view never saw
+    src.merge(snap(("a", "user", 1L)), "conv_id", 2L)
+    src.merge(snap(("c", "user", 2L)), "conv_id", 3L)
+    assert(!src.manifestVersions().contains(1L))
+    val rerun = MaterializedAgg.maintain(src, replica, mv, "last_role", sums, ckpt)
+    val e = try intercept[StreamingQueryException](rerun.awaitTermination(120000))
+      finally rerun.stop()
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(c => String.valueOf(c.getMessage).contains("rebuild the view")), e)
+    assert(replica.readManifest().lastBatchId === 0L) // nothing diverged
+    // the rebuild: a fresh view, replica and checkpoint
+    val replica2 = mkSrc("mvdrep2"); val mv2 = mkMv("mvd2")
+    drain(src, replica2, mv2, tmpDir("mvdckpt2") + "/c")
+    assert(viewOf(mv2) == direct(src))
   }
 
   /** First half of applyBatch only: deltas computed against the
